@@ -32,7 +32,7 @@ import streams
 
 SHAPE = gen.PacketShape(n_open=200, pkts_lo=60, pkts_hi=140, reverse_share=1 / 3)
 # Offered packets/s.  On 4 cores the backlog stays flat at 2000/s and
-# diverges near 3000/s; at 1000/s batches take 1.5-4 s with the host's
+# diverges near 3000/s; at 1000/s batches take 3-5 s with the host's
 # speed, so a window holds several of them.
 RATE = 1_000
 # A flow times out in the first batch that starts an idle timeout after
@@ -113,7 +113,6 @@ def run(run):
     time.sleep(max(0.0, w0 - time.time()))
     run.setup_done()
     drained_ok = wait_drained(query, w1, w1 + TAIL_DEADLINE_S)
-    run.measure_done()
     stopped = streams.stop(query, 60)
     bs = metrics.batches(query.recentProgress)
     commit = {b.batch_id: b.end for b in bs}
@@ -169,8 +168,6 @@ def run(run):
     res.e2e["latency_p50_s"] = (lag["p50"], "s")
     res.e2e["latency_p95_s"] = (lag["p95"], "s")
     res.e2e["throughput_per_s"] = (processed / span, "1/s")
-    # the offered rate bounds throughput; lag is mostly batch time
-    res.host_bound = {"latency_p50_s": 1, "latency_p95_s": 1}
     res.detail = {
         "lag": lag, "checks": checks, "missing": missing[:10], "bad_totals": bad[:10],
         "sink_rows": len(rows), "backlog_growth_s": growth, "backlog": backlog,

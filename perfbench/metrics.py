@@ -155,12 +155,10 @@ def peak_rss_kb(root_pid: int) -> dict:
 @dataclass
 class Result:
     """A workload's outcome: operations attempted and failed, and metrics
-    as name -> (value, unit).  ``host_bound`` names the end-to-end metrics
-    that scale with host CPU speed: 1 for a time, -1 for a rate."""
+    as name -> (value, unit)."""
 
     attempted: int
     failed: int
     e2e: dict = field(default_factory=dict)
-    host_bound: dict = field(default_factory=dict)
     layers: dict = field(default_factory=dict)
     detail: dict = field(default_factory=dict)

@@ -23,14 +23,15 @@ import json
 import os
 import shutil
 import signal
-import subprocess
 import sys
 import time
 
-from headline_batch import HEADLINE
-
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+sys.path.insert(0, ROOT)
+
+from headline_batch import HEADLINE  # noqa: E402 — needs the repository root
+
 WORK_ROOT = os.path.join(ROOT, ".perfbench_work")
 WORKLOADS = ("live_accum", "headline_batch")
 
@@ -96,7 +97,7 @@ def configure_env(work: str) -> None:
 class Run:
     """What a workload gets: its arguments, a working dir, the session, and
     the clock.  A workload calls ``setup_done()`` just before its first
-    timed operation and ``measure_done()`` after its last."""
+    timed operation."""
 
     def __init__(self, args, work: str, t_process: float):
         self.seed = args.seed
@@ -105,17 +106,11 @@ class Run:
         self.work = work
         self.t_process = t_process
         self.setup_s: float | None = None
-        self.measured: list[float] = []
         self.spark = None
 
     def setup_done(self) -> None:
         """Set-up ends and the measured part begins."""
-        self.measured = [time.time()]
-        self.setup_s = self.measured[0] - self.t_process
-
-    def measure_done(self) -> None:
-        """The measured part ends."""
-        self.measured.append(time.time())
+        self.setup_s = time.time() - self.t_process
 
     def path(self, *parts: str) -> str:
         return os.path.join(self.work, *parts)
@@ -123,13 +118,13 @@ class Run:
     def start_spark(self):
         from anti_ddos_spark.session import get_spark
 
-        # The heap is fixed and touched up front: a heap grown on demand
-        # made GC sizing, and how much of it a run touched, a large share
-        # of the run-to-run spread of both time and peak memory.
-        java_opts = (
-            f"-Djava.io.tmpdir={os.environ['TMPDIR']}"
-            f" -Xms{os.environ['SPARK_GRAFT_DRIVER_MEM']} -XX:+AlwaysPreTouch"
-        )
+        # The heap has a fixed maximum (spark.driver.memory) and grows on
+        # demand, so the JVM's peak resident memory follows what the program
+        # touches.  The serial collector grows it by how much data survives
+        # collection; G1's growth and young-generation sizing follow GC pause
+        # times, which moved peak memory by 10-20% from run to run on a
+        # shared host.
+        java_opts = f"-Djava.io.tmpdir={os.environ['TMPDIR']} -XX:+UseSerialGC"
         self.spark = get_spark(
             app_name="perfbench",
             extra_conf={
@@ -140,6 +135,13 @@ class Run:
             },
         )
         self.spark.sparkContext.setLogLevel("ERROR")
+
+    def pool_peaks_mb(self) -> dict:
+        """Peak used MB of each JVM memory pool (heap generations, metaspace,
+        code cache), from the memory MXBeans."""
+        mf = self.spark._jvm.java.lang.management.ManagementFactory
+        return {p.getName(): p.getPeakUsage().getUsed() / 2**20
+                for p in mf.getMemoryPoolMXBeans()}
 
     def jvm_pid(self) -> int:
         from pyspark import SparkContext
@@ -169,47 +171,26 @@ def main() -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
     t_process = process_start_time()
-    # a terminated run still stops its JVM and probe (the finally below)
+    # a terminated run still stops its JVM (the finally below)
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
 
-    sys.path.insert(0, ROOT)
     import anti_ddos_spark  # noqa: F401 — fail before any result if absent
-    import hostprobe
     import metrics
 
     work = os.path.join(WORK_ROOT, f"{args.workload}-{args.seed}-{os.getpid()}")
     configure_env(work)
     workload = importlib.import_module(args.workload)
     run = Run(args, work, t_process)
-    probe_path = os.path.join(work, "hostprobe.txt")
-    probe_out = open(probe_path, "w")
-    probe = subprocess.Popen(
-        [sys.executable, os.path.join(HERE, "hostprobe.py")], stdout=probe_out
-    )
     try:
         run.start_spark()
         res = workload.run(run)
         rss = metrics.peak_rss_kb(run.jvm_pid())
+        res.detail["jvm_pool_peak_mb"] = run.pool_peaks_mb()
         res.e2e["peak_rss_mb"] = (sum(rss.values()) / 1024, "MB")
         res.detail["peak_rss_kb"] = rss
     finally:
         run.close()
-        probe.terminate()
-        probe.wait(timeout=30)
-        probe_out.close()
-        with open(probe_path) as f:
-            probe_samples = [tuple(map(float, line.split())) for line in f if line.strip()]
         shutil.rmtree(work, ignore_errors=True)
-    # Host-bound metrics are scaled to the reference host speed by the
-    # probe's median over the measured part of the run.
-    factor, n_probe = hostprobe.host_factor(probe_samples, *run.measured)
-    res.detail["host"] = {
-        "factor": factor, "samples": n_probe,
-        "raw": {k: res.e2e[k][0] for k in res.host_bound},
-    }
-    for k, sign in res.host_bound.items():
-        v, unit = res.e2e[k]
-        res.e2e[k] = (v / factor**sign, unit)
     res.e2e["setup_s"] = (run.setup_s, "s")
 
     results_dir = os.path.join(WORK_ROOT, "results")
