@@ -43,11 +43,10 @@ _MODULE_ORDER = (
 
 
 def _modules():
+    # import errors raise, never shrink the registry; q72's missing-protobuf
+    # skip is not one (streamops registers q72 only where it can run)
     for name in _MODULE_ORDER:
-        try:
-            yield __import__(f"anti_ddos_spark.queries.{name}", fromlist=["QUERIES"])
-        except ImportError:
-            continue
+        yield __import__(f"anti_ddos_spark.queries.{name}", fromlist=["QUERIES"])
 
 
 def registry() -> dict[str, Query]:

@@ -143,6 +143,20 @@ def approx_key_count(df, *cols: str) -> int:
     return int(row["n"]) if row and row["n"] is not None else 1
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of MemTotal in whole GiB (1g-48g):
+    a fixed 48g let a long session's heap outgrow a 16 GB machine's RAM."""
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(48, max(1, kb // 2**21))}g"
+
+
 def get_spark(
     app_name: str = "anti_ddos_spark",
     master: str | None = None,
@@ -152,7 +166,8 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for this engine.
 
     Defaults honour the driver environment variables:
-    ``SPARK_GRAFT_CPUS`` (local parallelism) — falls back to all cores.
+    ``SPARK_GRAFT_CPUS`` (local parallelism) — falls back to all cores;
+    ``SPARK_GRAFT_DRIVER_MEM`` (driver heap) — see ``driver_memory``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -184,7 +199,7 @@ def get_spark(
         # ANSI on — keep it, queries guard div-by-zero explicitly.
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
     )
     if os.environ.get("SPARK_GRAFT_ROCKSDB", "") not in ("", "0"):
         for k, v in rocksdb_conf().items():

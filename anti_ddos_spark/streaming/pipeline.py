@@ -40,21 +40,22 @@ def scored_flow_stream(
     """packets stream → feature rows → RF scores.
 
     mode='session_window' (append; deterministic event-time),
-    mode='accum' (update; partial emission + processing-time timeout
-    with O(1) per-flow accumulator state — the production update-mode
-    path), or mode='stateful' (update; array-state parity twin).
+    mode='accum' (update; processing-time timeout with O(1) per-flow
+    accumulator state — the production update-mode path; with
+    ``finalized_only`` it builds no partial rows), or mode='stateful'
+    (update; array-state parity twin).
     """
-    from anti_ddos_spark.streaming.stateful_accum import stateful_flow_features_accum
+    from anti_ddos_spark.streaming.stateful_accum import _accum_flows
 
     if mode == "session_window":
         flows = streaming_flow_features(packets, **sessionizer_kwargs)
     elif mode == "accum":
-        flows = stateful_flow_features_accum(packets, **sessionizer_kwargs)
+        flows = _accum_flows(packets, partials=not finalized_only, **sessionizer_kwargs)
     elif mode == "stateful":
         flows = stateful_flow_features(packets, **sessionizer_kwargs)
     else:
         raise ValueError(f"unknown mode {mode!r}")
-    if finalized_only:
+    if finalized_only and mode != "accum":  # accum emitted final rows only
         flows = flows.filter(F.col("is_final"))
     # feature vector must not see identity/string cols
     feature_cols = [c for c in FLOW_FEATURE_NAMES if c in flows.columns]

@@ -9,8 +9,13 @@ diffs against the stored last timestamp. No packet arrays, no
 per-packet state growth — unlike both the reference (1000-entry capped
 arrays, spark_app/main.py:288-292) and our array-state variant
 (stateful.py), a flow's state here is ~40 doubles regardless of
-length, and partial emission costs one row construction, not an
-array re-aggregation.
+length.
+
+Input (``accum_input``, shared with stateful_tws.py): the flow key plus
+13 value columns — ts_us, from_a, tcp_seq, length, act and the 8 TCP
+flags with nulls as 0. Output: a final row when a flow times out, and by
+default a partial row per flow in each batch that reads its packets; the
+detection pipeline keeps finals only, so it turns partials off.
 
 Tradeoffs vs the array variant (both ship; pick per workload):
 - sumsq-based std loses precision for huge values (catastrophic
@@ -27,16 +32,22 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import TYPE_CHECKING, Any
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from anti_ddos_spark.normalize import FLOW_KEY_COLS, normalize_flow_key
 from anti_ddos_spark.schemas import FLOW_SCHEMA
-from anti_ddos_spark.streaming.stateful import DEFAULT_TIMEOUT_MS, PKT_FIELDS
+from anti_ddos_spark.streaming.stateful import DEFAULT_TIMEOUT_MS
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
+
+# input flag columns and the accumulators they sum into
+_FLAG_COLS = ["fin_flag", "syn_flag", "rst_flag", "psh_flag",
+              "ack_flag", "urg_flag", "cwr_flag", "ece_flag"]
+_FLAG_ACC = ["fin", "syn", "rst", "psh", "ack", "urg", "cwe", "ece"]
 
 # accumulator vector layout (all doubles for a flat Arrow round-trip)
 _SERIES = [
@@ -101,38 +112,44 @@ def unpack_state(vals: tuple) -> dict:
     return acc
 
 
-def _update_accumulators(acc: dict, pdf: "pd.DataFrame", key: tuple) -> dict:
-    """Vectorized-ish accumulator update for one flow's batch slice."""
-    import numpy as np
+def _new_acc(first_ts: float, src_is_flow_src: bool, key: tuple) -> dict:
+    acc = {n: 0.0 for n in ACC_NAMES}
+    for p in ("lenf", "lenb", "iatf", "iatb", "fiat", "alen"):
+        acc[f"{p}_mn"], acc[f"{p}_mx"] = float("inf"), float("-inf")
+    for n in ("last_ts", "last_fwd_ts", "last_bwd_ts", "prev_fwd_len", "prev_bwd_len"):
+        acc[n] = float("nan")
+    acc["first_ts"] = first_ts
+    # the first packet's "ip:port"; its orientation alone decides direction
+    acc["sp"] = f"{key[0]}:{int(key[1])}" if src_is_flow_src else f"{key[2]}:{int(key[3])}"
+    acc["src_is_flow_src"] = float(src_is_flow_src)
+    return acc
 
-    pdf = pdf.sort_values(["ts_us", "src_ip", "src_port", "tcp_seq"], kind="mergesort")
-    ts = pdf["ts_us"].to_numpy(dtype="int64")
-    ln = pdf["length"].to_numpy(dtype="int64")
-    proto = pdf["protocol"].to_numpy(dtype="int64")
 
+def _prev(v, last: float, missing):
+    """``v`` shifted one step later, led by the stored ``last`` (NaN: none)."""
+    prev = np.empty_like(v)
+    prev[1:] = v[:-1]
+    prev[0] = last if last == last else missing
+    return prev
+
+
+def update_accumulators(acc: dict | None, pdf: "pd.DataFrame", key: tuple) -> dict:
+    """Fold one flow's batch slice (``accum_input`` columns) into its
+    accumulators; ``acc`` None starts the flow."""
+    ts = pdf["ts_us"].to_numpy("int64")
+    from_a = pdf["from_a"].to_numpy(bool)
+    # packet order (ts_us, src_ip, src_port, tcp_seq), nulls last: the
+    # canonical flow_src endpoint has the lesser IP, and an equal-IP key
+    # holds one src endpoint only (normalize_flow_key)
+    seq = pdf["tcp_seq"].to_numpy("float64", na_value=np.inf)
+    order = np.lexsort((seq, ~from_a, ts))
+    ts, from_a = ts[order], from_a[order]
+    ln = pdf["length"].to_numpy("int64")[order]
     if acc is None:
-        acc = {n: 0.0 for n in ACC_NAMES}
-        for n in ("lenf_mn", "lenb_mn", "iatf_mn", "iatb_mn", "fiat_mn", "alen_mn"):
-            acc[n] = float("inf")
-        for n in ("lenf_mx", "lenb_mx", "iatf_mx", "iatb_mx", "fiat_mx", "alen_mx"):
-            acc[n] = float("-inf")
-        acc["first_ts"] = float(ts[0])
-        acc["last_ts"] = float("nan")
-        acc["last_fwd_ts"] = float("nan")
-        acc["last_bwd_ts"] = float("nan")
-        acc["prev_fwd_len"] = float("nan")
-        acc["prev_bwd_len"] = float("nan")
-        first = pdf.iloc[0]
-        acc["sp"] = f"{first['src_ip']}:{int(first['src_port'])}"
-        acc["src_is_flow_src"] = float(first["src_ip"] == key[0] and int(first["src_port"]) == int(key[1]))
+        acc = _new_acc(float(ts[0]), bool(from_a[0]), key)
+    is_fwd = from_a == (acc["src_is_flow_src"] >= 0.5)
 
-    sp = acc["sp"]
-    is_fwd = (
-        pdf["src_ip"].astype(str) + ":" + pdf["src_port"].astype(int).astype(str)
-    ).to_numpy() == sp
-
-    def series(prefix: str, vals, mask=None):
-        v = vals if mask is None else vals[mask]
+    def series(prefix: str, v):
         if len(v) == 0:
             return
         acc[f"{prefix}_n"] += len(v)
@@ -141,69 +158,43 @@ def _update_accumulators(acc: dict, pdf: "pd.DataFrame", key: tuple) -> dict:
         acc[f"{prefix}_mn"] = min(acc[f"{prefix}_mn"], float(v.min()))
         acc[f"{prefix}_mx"] = max(acc[f"{prefix}_mx"], float(v.max()))
 
-    import numpy as np
+    def gaps(t, last):
+        # diffs within the batch plus the bridge from the stored last ts
+        prev = _prev(t, last, -1)
+        return (t - prev)[prev >= 0].astype("float64")
 
-    series("lenf", ln, is_fwd)
-    series("lenb", ln, ~is_fwd)
+    series("lenf", ln[is_fwd])
+    series("lenb", ln[~is_fwd])
     series("alen", ln)
-
-    # whole-flow IATs: diffs within batch + bridge from last_ts
-    all_prev = np.empty_like(ts)
-    all_prev[1:] = ts[:-1]
-    bridge = acc["last_ts"]
-    all_prev[0] = int(bridge) if bridge == bridge else -1  # NaN check
-    fiat = (ts - all_prev)[all_prev >= 0].astype("float64")
-    series("fiat", fiat)
-
-    # per-direction IATs
-    for dname, mask, last_key in (("iatf", is_fwd, "last_fwd_ts"), ("iatb", ~is_fwd, "last_bwd_ts")):
-        dts = ts[mask]
+    series("fiat", gaps(ts, acc["last_ts"]))
+    acc["last_ts"] = float(ts[-1])
+    for d, mask in (("fwd", is_fwd), ("bwd", ~is_fwd)):
+        dts, dl = ts[mask], ln[mask].astype("float64")
         if len(dts) == 0:
             continue
-        prev = np.empty_like(dts)
-        prev[1:] = dts[:-1]
-        lb = acc[last_key]
-        prev[0] = int(lb) if lb == lb else -1
-        diat = (dts - prev)[prev >= 0].astype("float64")
-        series(dname, diat)
-        acc[last_key] = float(dts[-1])
-
-    acc["last_ts"] = float(ts[-1])
+        series(f"iat{d[0]}", gaps(dts, acc[f"last_{d}_ts"]))
+        # bulk runs: a run starts when length > 1000 and the previous
+        # packet of the SAME direction was ≤ 1000 (or absent)
+        bulk = dl > 1000
+        acc[f"{d}_bulk_b"] += float(dl[bulk].sum())
+        acc[f"{d}_bulk_p"] += float(bulk.sum())
+        acc[f"{d}_bulk_e"] += float((bulk & (_prev(dl, acc[f"prev_{d}_len"], 0.0) <= 1000)).sum())
+        acc[f"last_{d}_ts"], acc[f"prev_{d}_len"] = float(dts[-1]), float(dl[-1])
 
     # flags / headers / activity
-    def colsum(c, mask=None):
-        v = pdf[c].fillna(0).to_numpy(dtype="float64")
-        if mask is not None:
-            v = v[mask]
-        return float(v.sum())
-
-    acc["fin"] += colsum("fin_flag"); acc["syn"] += colsum("syn_flag")
-    acc["rst"] += colsum("rst_flag"); acc["psh"] += colsum("psh_flag")
-    acc["ack"] += colsum("ack_flag"); acc["urg"] += colsum("urg_flag")
-    acc["cwe"] += colsum("cwr_flag"); acc["ece"] += colsum("ece_flag")
-    acc["fwd_psh"] += colsum("psh_flag", is_fwd); acc["bwd_psh"] += colsum("psh_flag", ~is_fwd)
-    acc["fwd_urg"] += colsum("urg_flag", is_fwd); acc["bwd_urg"] += colsum("urg_flag", ~is_fwd)
-    hdr = np.where(proto == 6, 20, 8).astype("float64")
-    acc["fwd_hdr"] += float(hdr[is_fwd].sum()); acc["bwd_hdr"] += float(hdr[~is_fwd].sum())
-    act = ((pdf["tcp_len"].fillna(0) > 0) | (pdf["udp_len"].fillna(0) > 0)).to_numpy()
-    acc["act_fwd"] += float(act[is_fwd].sum())
-
-    # bulk runs: a run starts when length > 1000 and the previous packet
-    # of the SAME direction was ≤ 1000 (or absent)
-    for dname, mask, prev_key in (("fwd", is_fwd, "prev_fwd_len"), ("bwd", ~is_fwd, "prev_bwd_len")):
-        dl = ln[mask].astype("float64")
-        if len(dl) == 0:
-            continue
-        prev = np.empty_like(dl)
-        prev[1:] = dl[:-1]
-        pl = acc[prev_key]
-        prev[0] = pl if pl == pl else 0.0
-        bulk = dl > 1000
-        acc[f"{dname}_bulk_b"] += float(dl[bulk].sum())
-        acc[f"{dname}_bulk_p"] += float(bulk.sum())
-        acc[f"{dname}_bulk_e"] += float((bulk & (prev <= 1000)).sum())
-        acc[prev_key] = float(dl[-1])
-
+    flags = np.stack([pdf[c].to_numpy("float64") for c in _FLAG_COLS], axis=1)[order]
+    tot, fwd = flags.sum(axis=0), flags[is_fwd].sum(axis=0)
+    for n, t in zip(_FLAG_ACC, tot):
+        acc[n] += float(t)
+    for d in ("psh", "urg"):
+        i = _FLAG_ACC.index(d)
+        acc[f"fwd_{d}"] += float(fwd[i])
+        acc[f"bwd_{d}"] += float(tot[i] - fwd[i])
+    n_fwd = int(is_fwd.sum())
+    hdr = 20.0 if int(key[4]) == 6 else 8.0
+    acc["fwd_hdr"] += hdr * n_fwd
+    acc["bwd_hdr"] += hdr * (len(ts) - n_fwd)
+    acc["act_fwd"] += float(pdf["act"].to_numpy(bool)[order][is_fwd].sum())
     return acc
 
 
@@ -300,53 +291,64 @@ def _emit_row(acc: dict, key: tuple, final: bool) -> list:
     return [row.get(f) for f in _OUT_FIELDS]
 
 
-def _make_update_fn(timeout_ms: int):
+def _make_update_fn(timeout_ms: int, partials: bool):
     def update(key: tuple[Any, ...], pdfs: Iterator["pd.DataFrame"], state: GroupState):
         import pandas as pd
 
-        def load() -> dict | None:
-            if not state.exists:
-                return None
-            return unpack_state(state.get)
-
+        acc = unpack_state(state.get) if state.exists else None
         if state.hasTimedOut:
-            acc = load()
             state.remove()
             if acc is not None:
                 yield pd.DataFrame([_emit_row(acc, key, True)], columns=_OUT_FIELDS)
             return
 
-        acc = load()
         for pdf in pdfs:
             if len(pdf):
-                acc = _update_accumulators(acc, pdf, key)
+                acc = update_accumulators(acc, pdf, key)
         if acc is None:
             return
         state.update(pack_state(acc))
         state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame([_emit_row(acc, key, False)], columns=_OUT_FIELDS)
+        if partials:
+            yield pd.DataFrame([_emit_row(acc, key, False)], columns=_OUT_FIELDS)
 
     return update
 
 
-def stateful_flow_features_accum(
-    packets: DataFrame, timeout_ms: int = DEFAULT_TIMEOUT_MS
-) -> DataFrame:
-    """Update-mode flow features with O(1) per-flow state."""
+def accum_input(packets: DataFrame) -> DataFrame:
+    """The flow key plus the 13 value columns the accumulators read:
+    from_a is "src endpoint is the key's flow_src", act is "tcp_len > 0
+    or udp_len > 0"."""
     from pyspark.sql import functions as F
 
-    from anti_ddos_spark.features_array import pkt_struct
-
-    flat_keys = [k for k in FLOW_KEY_COLS if k != "protocol"]
-    keyed = (
-        normalize_flow_key(packets)
-        .select(*flat_keys, pkt_struct().alias("p"))
-        .select(*flat_keys, "p.*")
+    col, no = F.col, F.lit(False)
+    from_a = (col("src_ip") == col("flow_src_ip")) & (col("src_port") == col("flow_src_port"))
+    return normalize_flow_key(packets).select(
+        *FLOW_KEY_COLS,
+        F.unix_micros("timestamp").alias("ts_us"),
+        F.coalesce(from_a, no).alias("from_a"),
+        "tcp_seq",
+        col("length").cast("long").alias("length"),
+        F.coalesce((col("tcp_len") > 0) | (col("udp_len") > 0), no).alias("act"),
+        *[F.coalesce(col(c), F.lit(0)).alias(c) for c in _FLAG_COLS],
     )
-    return keyed.groupBy(*FLOW_KEY_COLS).applyInPandasWithState(
-        _make_update_fn(timeout_ms),
+
+
+def _accum_flows(
+    packets: DataFrame, timeout_ms: int = DEFAULT_TIMEOUT_MS, partials: bool = True
+) -> DataFrame:
+    """The accumulator sessionizer; ``partials=False`` emits timeout rows only."""
+    return accum_input(packets).groupBy(*FLOW_KEY_COLS).applyInPandasWithState(
+        _make_update_fn(timeout_ms, partials),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
+
+
+def stateful_flow_features_accum(
+    packets: DataFrame, timeout_ms: int = DEFAULT_TIMEOUT_MS
+) -> DataFrame:
+    """Update-mode flow features with O(1) per-flow state, partial rows on."""
+    return _accum_flows(packets, timeout_ms)

@@ -3,8 +3,8 @@
 Third streaming mode beside the session_window path
 (sessionize_stream.py) and the applyInPandasWithState accumulator path
 (stateful_accum.py), per SURVEY §2.3 G5. Same O(1)-per-flow accumulator
-semantics — the math is literally shared (`_update_accumulators` /
-`_emit_row` imports) — but expressed through the
+semantics and input — the math is literally shared (`accum_input`,
+`update_accumulators`, `_emit_row`) — but expressed through the
 ``StatefulProcessor`` lifecycle (init → handleInputRows →
 handleExpiredTimer → close) instead of a single update closure:
 
@@ -40,16 +40,17 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
 )
 
-from anti_ddos_spark.normalize import FLOW_KEY_COLS, normalize_flow_key
+from anti_ddos_spark.normalize import FLOW_KEY_COLS
 from anti_ddos_spark.streaming.stateful import DEFAULT_TIMEOUT_MS
 from anti_ddos_spark.streaming.stateful_accum import (
     OUTPUT_SCHEMA,
     STATE_SCHEMA,
     _OUT_FIELDS,
     _emit_row,
-    _update_accumulators,
+    accum_input,
     pack_state,
     unpack_state,
+    update_accumulators,
 )
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -85,7 +86,7 @@ class FlowFeatureProcessor(StatefulProcessor):
         acc = self._load()
         for pdf in rows:
             if len(pdf):
-                acc = _update_accumulators(acc, pdf, key)
+                acc = update_accumulators(acc, pdf, key)
         if acc is None:
             return
         self._acc.update(pack_state(acc))
@@ -117,15 +118,7 @@ def tws_flow_features(
     rejects the HDFS-backed provider for this operator) — see
     session.rocksdb_conf().
     """
-    from anti_ddos_spark.features_array import pkt_struct
-
-    flat_keys = [k for k in FLOW_KEY_COLS if k != "protocol"]
-    keyed = (
-        normalize_flow_key(packets)
-        .select(*flat_keys, pkt_struct().alias("p"))
-        .select(*flat_keys, "p.*")
-    )
-    return keyed.groupBy(*FLOW_KEY_COLS).transformWithStateInPandas(
+    return accum_input(packets).groupBy(*FLOW_KEY_COLS).transformWithStateInPandas(
         statefulProcessor=FlowFeatureProcessor(timeout_ms),
         outputStructType=OUTPUT_SCHEMA,
         outputMode="Update",

@@ -20,6 +20,11 @@ registry change.
 
 from __future__ import annotations
 
+import sys
+
+import pytest
+
+import anti_ddos_spark.queries as queries
 from anti_ddos_spark.queries import registry, full_registry
 
 REGISTRY_ORDER = ['q01_pricing_summary',
@@ -252,3 +257,14 @@ def test_bench_streaming_set_matches_registry():
 
     missing = STREAMING_QUERIES - set(full_registry())
     assert not missing, f"bench STREAMING_QUERIES not in registry: {missing}"
+
+
+def test_registry_import_error_is_loud(monkeypatch):
+    """A query module that fails to import must fail the registry, not
+    silently drop its queries."""
+    monkeypatch.setattr(queries, "_MODULE_ORDER", (*queries._MODULE_ORDER, "broken"))
+    monkeypatch.setitem(sys.modules, "anti_ddos_spark.queries.broken", None)
+    with pytest.raises(ImportError):
+        registry()
+    with pytest.raises(ImportError):
+        full_registry()

@@ -96,19 +96,10 @@ def test_tws_processor_logic_matches_batch(spark):
     cols = pdf_all.columns
     want = sorted(tuple(str(v) for v in r) for r in pdf_all.collect())
 
-    # replicate the operator's upstream projection: normalized flow key +
-    # flat packet columns (same path tws_flow_features builds)
-    from pyspark.sql import functions as F
+    # the operator's upstream projection (the one tws_flow_features builds)
+    from anti_ddos_spark.streaming.stateful_accum import accum_input
 
-    from anti_ddos_spark.features_array import pkt_struct
-    from anti_ddos_spark.normalize import FLOW_KEY_COLS, normalize_flow_key
-
-    flat_keys = [k for k in FLOW_KEY_COLS if k != "protocol"]
-    keyed = (
-        normalize_flow_key(spark.createDataFrame(rows, PACKET_SCHEMA))
-        .select(*flat_keys, pkt_struct().alias("p"))
-        .select(*flat_keys, "p.*")
-    ).toPandas()
+    keyed = accum_input(spark.createDataFrame(rows, PACKET_SCHEMA)).toPandas()
 
     got_rows = []
     for key, grp in keyed.groupby(
