@@ -42,7 +42,7 @@ def _wait_finals(spark, name, n_flows):
 
 
 def _assert_finals_match(got_df, want_df):
-    cols = [c for c in want_df.columns if c in got_df.columns]
+    cols = want_df.columns
     want = sorted(tuple(str(v) for v in r) for r in want_df.select(*cols).collect())
     finals = got_df.filter("is_final")
     assert finals.count() == len(want), (
