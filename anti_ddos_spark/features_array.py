@@ -139,45 +139,34 @@ def _int(c: Column) -> Column:
     return F.least(F.coalesce(c, F.lit(0)), F.lit(2_147_483_647)).cast("int")
 
 
-def array_flow_features(pkts_unsorted: Column) -> list[Column]:
-    """Identity + 77 features (faithful mode) from a packet-struct array.
+def array_flow_features() -> list[Column]:
+    """Identity + 77 features (faithful mode) from the packet-struct
+    array column ``pkts``.
 
     Returns aliased Columns; apply in a single select after the
     collect_list aggregation. Field-for-field equal to the batch
     window+agg implementation (proven by the batch≡streaming tests).
 
-    Memoized per (input expression text, JVM) like features._AGG_MEMO:
-    building the ~80 deep higher-order Columns costs ~2-3 s of driver
-    py4j round-trips per call (measured r13 — the dominant build cost
-    of every streaming sessionizer start, which constructs this tree
-    for each new query), and the trees depend only on the input
-    expression. All production callers pass ``F.col("pkts")``, so the
-    memo key is the column's expression text."""
+    Memoized per JVM like features._AGG_MEMO: building the ~80 deep
+    higher-order Columns costs ~2-3 s of driver py4j round-trips per
+    call (measured r13 — the dominant build cost of every streaming
+    sessionizer start, which constructs this tree for each new query).
+    The input is always the unresolved name ``pkts``, so one tree
+    serves every caller's DataFrame."""
     from anti_ddos_spark.features import _jvm_key
 
-    text = str(pkts_unsorted._jc)
-    # Memo only UNRESOLVED plain column references (r13 ADVICE): a
-    # RESOLVED attribute (df['pkts']) stringifies without its exprId,
-    # so two different DataFrames' bound columns could collide and the
-    # memo would hand A's bound tree to a query on B. Resolved
-    # attributes print with their qualifier/#id or non-name characters;
-    # a plain unresolved name is alphanumeric/_ only.
-    if not text.replace("_", "").isalnum():
-        return _build_array_flow_features(pkts_unsorted)
-    key = ("array_flow_features", text, _jvm_key())
+    key = _jvm_key()
     cols = _ARRAY_FEATS_MEMO.get(key)
     if cols is None:
-        cols = _ARRAY_FEATS_MEMO[key] = _build_array_flow_features(
-            pkts_unsorted
-        )
+        cols = _ARRAY_FEATS_MEMO[key] = _build_array_flow_features()
     return list(cols)
 
 
-_ARRAY_FEATS_MEMO: dict[tuple, list[Column]] = {}
+_ARRAY_FEATS_MEMO: dict[int | None, list[Column]] = {}
 
 
-def _build_array_flow_features(pkts_unsorted: Column) -> list[Column]:
-    pkts = F.array_sort(pkts_unsorted)
+def _build_array_flow_features() -> list[Column]:
+    pkts = F.array_sort(F.col("pkts"))
     n = F.size(pkts)
     first = F.element_at(pkts, 1)
     last = F.element_at(pkts, n)

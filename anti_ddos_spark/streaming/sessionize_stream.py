@@ -45,7 +45,7 @@ def streaming_flow_features(
         F.session_window("timestamp", f"{int(gap_s * 1000)} milliseconds"),
         *FLOW_KEY_COLS,
     ).agg(F.collect_list(pkt_struct()).alias("pkts"))
-    out = grouped.select(*array_flow_features(F.col("pkts")))
+    out = grouped.select(*array_flow_features())
     # append-mode rows are final by construction
     return out.withColumn("is_final", F.lit(True))
 
@@ -77,4 +77,4 @@ def flow_features_arrayagg(
     grouped = df.groupBy(*FLOW_KEY_COLS, "session_id").agg(
         F.collect_list(pkt_struct()).alias("pkts")
     )
-    return grouped.select(*array_flow_features(F.col("pkts")))
+    return grouped.select(*array_flow_features())

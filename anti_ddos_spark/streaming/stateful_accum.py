@@ -6,10 +6,9 @@ constant-size accumulators — (n, sum, sumsq, min, max) per series plus
 last-seen timestamps/lengths per direction. Mean = sum/n, population
 std = sqrt(sumsq/n - (sum/n)²), IAT stats accumulate from per-packet
 diffs against the stored last timestamp. No packet arrays, no
-per-packet state growth — unlike both the reference (1000-entry capped
-arrays, spark_app/main.py:288-292) and our array-state variant
-(stateful.py), a flow's state here is ~40 doubles regardless of
-length.
+per-packet state growth — unlike the reference (1000-entry capped
+arrays, spark_app/main.py:288-292), a flow's state here is ~40 doubles
+regardless of length.
 
 Input (``accum_input``, shared with stateful_tws.py): the flow key plus
 13 value columns — ts_us, from_a, tcp_seq, length, act and the 8 TCP
@@ -17,11 +16,10 @@ flags with nulls as 0. Output: a final row when a flow times out, and by
 default a partial row per flow in each batch that reads its packets; the
 detection pipeline keeps finals only, so it turns partials off.
 
-Tradeoffs vs the array variant (both ship; pick per workload):
+Tradeoffs vs the exact batch array path (features_array):
 - sumsq-based std loses precision for huge values (catastrophic
   cancellation) — the int()-cast features can differ ±1 from the exact
-  two-pass computation (same fuzz band the test suite applies between
-  the window and array paths);
+  two-pass computation (the fuzz band the test suite applies);
 - cross-batch packet reordering cannot be repaired: within a batch we
   sort by timestamp, across batches the accumulators assume arrival
   order (the reference has the same property, main.py:524).
@@ -39,10 +37,11 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from anti_ddos_spark.normalize import FLOW_KEY_COLS, normalize_flow_key
 from anti_ddos_spark.schemas import FLOW_SCHEMA
-from anti_ddos_spark.streaming.stateful import DEFAULT_TIMEOUT_MS
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
+
+DEFAULT_TIMEOUT_MS = 60_000  # reference: state.setTimeoutDuration(60000), main.py:981
 
 # input flag columns and the accumulators they sum into
 _FLAG_COLS = ["fin_flag", "syn_flag", "rst_flag", "psh_flag",
@@ -334,10 +333,13 @@ def accum_input(packets: DataFrame) -> DataFrame:
     )
 
 
-def _accum_flows(
+def stateful_flow_features_accum(
     packets: DataFrame, timeout_ms: int = DEFAULT_TIMEOUT_MS, partials: bool = True
 ) -> DataFrame:
-    """The accumulator sessionizer; ``partials=False`` emits timeout rows only."""
+    """Update-mode flow features with O(1) per-flow state: a final row
+    (``is_final``) once a flow idles ``timeout_ms`` of processing time,
+    plus a partial row per touched flow per batch unless ``partials`` is
+    False. Use with ``outputMode("update")``."""
     return accum_input(packets).groupBy(*FLOW_KEY_COLS).applyInPandasWithState(
         _make_update_fn(timeout_ms, partials),
         outputStructType=OUTPUT_SCHEMA,
@@ -345,10 +347,3 @@ def _accum_flows(
         outputMode="update",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
-
-
-def stateful_flow_features_accum(
-    packets: DataFrame, timeout_ms: int = DEFAULT_TIMEOUT_MS
-) -> DataFrame:
-    """Update-mode flow features with O(1) per-flow state, partial rows on."""
-    return _accum_flows(packets, timeout_ms)

@@ -41,8 +41,8 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 from anti_ddos_spark.normalize import FLOW_KEY_COLS
-from anti_ddos_spark.streaming.stateful import DEFAULT_TIMEOUT_MS
 from anti_ddos_spark.streaming.stateful_accum import (
+    DEFAULT_TIMEOUT_MS,
     OUTPUT_SCHEMA,
     STATE_SCHEMA,
     _OUT_FIELDS,

@@ -7,7 +7,7 @@ kept up: sustained processedRowsPerSecond, mean batch duration vs the
 trigger interval, and end-of-run backlog.
 
 Usage:  python bench_stream.py [rows_per_sec] [duration_s] [mode] [n_flows]
-        mode ∈ session_window | accum | stateful, each optionally with a
+        mode ∈ session_window | accum, each optionally with a
         "+score" suffix (e.g. accum+score) that appends in-stream RF
         scoring (100 trees × depth 6, the reference's model contract) to
         the plan — BASELINE.md's full streaming proxy. The model is
@@ -63,6 +63,10 @@ def main() -> None:
     rows_per_sec = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
     duration_s = int(sys.argv[2]) if len(sys.argv) > 2 else 30
     mode = sys.argv[3] if len(sys.argv) > 3 else "session_window"
+    mode, _, score_suffix = mode.partition("+")
+    if mode not in ("session_window", "accum") or score_suffix not in ("", "score"):
+        raise ValueError(f"unknown mode {sys.argv[3]!r}")
+    with_score = score_suffix == "score"
     flows_arg = sys.argv[4] if len(sys.argv) > 4 else "1000"
     flows_arg, _, provider = flows_arg.partition(",")
     n_flows = int(flows_arg)
@@ -86,7 +90,6 @@ def main() -> None:
     )
     from anti_ddos_spark.sources.packets import rate_packet_stream
     from anti_ddos_spark.streaming.sessionize_stream import streaming_flow_features
-    from anti_ddos_spark.streaming.stateful import stateful_flow_features
     from anti_ddos_spark.streaming.stateful_accum import stateful_flow_features_accum
 
     # Streaming micro-batches are small; 32 shuffle partitions would give
@@ -99,8 +102,6 @@ def main() -> None:
 
         use_rocksdb(spark)
 
-    mode, _, score_suffix = mode.partition("+")
-    with_score = score_suffix == "score"
     model = _train_soak_model(spark) if with_score else None
 
     packets = rate_packet_stream(
@@ -121,11 +122,8 @@ def main() -> None:
     elif mode == "session_window":
         flows = streaming_flow_features(packets, gap_s=5, watermark="0 seconds")
         out_mode = "append"
-    elif mode == "accum":
-        flows = stateful_flow_features_accum(packets, timeout_ms=5_000)
-        out_mode = "update"
     else:
-        flows = stateful_flow_features(packets, timeout_ms=5_000)
+        flows = stateful_flow_features_accum(packets, timeout_ms=5_000)
         out_mode = "update"
 
     ckpt = tempfile.mkdtemp(prefix="bench_stream_ck_")

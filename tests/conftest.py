@@ -58,7 +58,7 @@ def spark():
     yield spark
 
 
-def make_packets(seed: int = 7, n_flows: int = 12, max_pkts: int = 40) -> list[dict]:
+def make_packets(seed: int = 7, n_flows: int = 12, max_flow_pkts: int = 40) -> list[dict]:
     """Deterministic synthetic packet rows per FIXTURES.md §1.
 
     Includes: bidirectional flows, interleaved flows, a >60 s gap flow,
@@ -74,7 +74,7 @@ def make_packets(seed: int = 7, n_flows: int = 12, max_pkts: int = 40) -> list[d
         dport = rng.choice([80, 443, 53, 8080])
         proto = rng.choice([6, 6, 6, 17])
         t = base + dt.timedelta(seconds=rng.uniform(0, 30))
-        n = 1 if f == 0 else rng.randint(2, max_pkts)
+        n = 1 if f == 0 else rng.randint(2, max_flow_pkts)
         for p in range(n):
             # one flow gets a >60s silence in the middle
             gap = 90.0 if (f == 1 and p == n // 2) else rng.uniform(0.0001, 2.0)

@@ -1,6 +1,8 @@
 """Spark-vs-DuckDB comparison harness mirroring (strictly) the driver's
 t2 check: row count, schema arity, and order-insensitive value comparison
-with columns sorted by name. Stricter than a hash: full value diff."""
+with columns sorted by name. Stricter than a hash: full value diff.
+Also the streaming-finals ≡ batch-features check the sessionizer tests
+share."""
 
 from __future__ import annotations
 
@@ -50,3 +52,26 @@ def compare(spark_df, con, sql: str, name: str = "?") -> None:
             (i, a, b) for i, (a, b) in enumerate(zip(s_rows, d_rows)) if a != b
         ][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
+
+
+def assert_finals_match(got_df, want_df) -> None:
+    """A streaming sessionizer's final rows equal the batch whole-flow
+    features, every oracle column; only the sumsq-derived std/variance
+    features may differ from the exact two-pass batch numbers, by at
+    most max(2, 0.1%)."""
+    cols = want_df.columns
+    want = sorted(tuple(str(v) for v in r) for r in want_df.select(*cols).collect())
+    finals = got_df.filter("is_final")
+    assert finals.count() == len(want), (
+        f"expected {len(want)} finals, got {finals.count()}"
+    )
+    got = sorted(tuple(str(v) for v in r) for r in finals.select(*cols).collect())
+    fuzzy = {i for i, c in enumerate(cols) if "std" in c or "variance" in c}
+    for ra, rb in zip(got, want):
+        for i, (va, vb) in enumerate(zip(ra, rb)):
+            if va == vb:
+                continue
+            assert i in fuzzy, f"{cols[i]}: stream={va} batch={vb}"
+            assert abs(int(va) - int(vb)) <= max(2, int(int(vb) * 0.001)), (
+                f"{cols[i]}: stream={va} batch={vb}"
+            )

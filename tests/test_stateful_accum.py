@@ -16,6 +16,7 @@ from anti_ddos_spark.schemas import PACKET_SCHEMA
 from anti_ddos_spark.streaming.sessionize_stream import flow_features_arrayagg
 from anti_ddos_spark.streaming.stateful_accum import stateful_flow_features_accum
 from tests.conftest import make_packets
+from tests.oracle_utils import assert_finals_match
 
 TIMEOUT_MS = 8_000
 WAIT_S = 90
@@ -41,25 +42,6 @@ def _wait_finals(spark, name, n_flows):
     return spark.table(name)
 
 
-def _assert_finals_match(got_df, want_df):
-    cols = want_df.columns
-    want = sorted(tuple(str(v) for v in r) for r in want_df.select(*cols).collect())
-    finals = got_df.filter("is_final")
-    assert finals.count() == len(want), (
-        f"expected {len(want)} finals, got {finals.count()}"
-    )
-    got = sorted(tuple(str(v) for v in r) for r in finals.select(*cols).collect())
-    fuzzy = {i for i, c in enumerate(cols) if "std" in c or "variance" in c}
-    for ra, rb in zip(got, want):
-        for i, (va, vb) in enumerate(zip(ra, rb)):
-            if va == vb:
-                continue
-            assert i in fuzzy, f"{cols[i]}: stream={va} batch={vb}"
-            assert abs(int(va) - int(vb)) <= max(2, int(int(vb) * 0.001)), (
-                f"{cols[i]}: stream={va} batch={vb}"
-            )
-
-
 def test_accum_finals_match_batch(spark, tmp_path):
     rows = make_packets()
     src, ck = str(tmp_path / "src"), str(tmp_path / "ck")
@@ -78,7 +60,7 @@ def test_accum_finals_match_batch(spark, tmp_path):
             spark.createDataFrame(rows, PACKET_SCHEMA), gap_s=None
         )
         got_df = _wait_finals(spark, "accum_flows", want_df.count())
-        _assert_finals_match(got_df, want_df)
+        assert_finals_match(got_df, want_df)
         # partial rows existed before finals
         assert got_df.filter("not is_final").count() > 0
     finally:
@@ -168,7 +150,7 @@ def test_accum_tie_order_and_finals_only_pipeline(spark, tmp_path):
         )
         n_flows = want_df.count()
         for name in ("accum_tie_flows", "accum_tie_scored"):
-            _assert_finals_match(_wait_finals(spark, name, n_flows), want_df)
+            assert_finals_match(_wait_finals(spark, name, n_flows), want_df)
         assert sum(p["numInputRows"] > 0 for p in queries[0].recentProgress) == len(slices)
         assert spark.table("accum_tie_flows").filter("not is_final").count() > 0
         assert spark.table("accum_tie_scored").filter("not is_final").count() == 0
