@@ -20,7 +20,10 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 import tempfile
+import time
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -32,7 +35,11 @@ from anti_ddos_spark.queries.flow import (
     events_as_packets,
 )
 from anti_ddos_spark.schemas import FLOW_SCHEMA
-from anti_ddos_spark.session import approx_key_count, sized_stream_partitions
+from anti_ddos_spark.session import (
+    approx_key_count,
+    scoped_conf,
+    sized_stream_partitions,
+)
 from anti_ddos_spark.streaming.sessionize_stream import streaming_flow_features
 
 # Cardinality-sized state partitions (r13): every stateful streaming row
@@ -56,39 +63,86 @@ _counter = itertools.count()
 # were accumulating temp views + replay/checkpoint dirs across reruns).
 _prior_views: dict[str, str] = {}
 
+# every availableNow run in this module must finish within this many
+# seconds, or it is stopped and raises
+STREAM_DEADLINE_S = 300
 
-def _await_spinning_stream(spark, q, name: str, deadline_s: float = 240) -> None:
-    """Wait out an availableNow run that processing-time timers keep
-    alive (ProcessingTimeTimeout / TWS timers must re-check wall-clock,
-    so the query spins no-data batches and never self-terminates inside
-    a huge timeout window), then stop it.
 
-    Completion signal (r14): a COMMITTED no-data batch —
-    ``lastProgress.numInputRows == 0`` — with at least one emitted row.
-    Under availableNow, no-data batches only run once every planned
-    data batch has committed, so this is a strictly stronger signal
-    than the previous emitted-row-count-stability heuristic AND removes
-    its fixed cost: the old loop paid a 5 s stability window + 1 s poll
-    granularity of pure wait per run after the real work had finished
-    (most of q71/q72's residual sweep marginal). The stability check
-    stays as the deadline-bounded fallback."""
-    import time as _time
+def _drained(progress) -> bool:
+    """True when ``progress`` is a committed no-data batch: no input rows
+    and every source's start offset equal to its end offset. Under
+    availableNow, such a batch runs only after every planned data batch
+    has committed, so nothing is left to read. A data batch that reads
+    zero rows (an empty file) still advances its source's offset and
+    does not count."""
+    return (
+        progress is not None
+        and progress.numInputRows == 0
+        and all(s.startOffset == s.endOffset for s in progress.sources)
+    )
 
-    last, stable_since = -1, _time.monotonic()
-    deadline = _time.monotonic() + deadline_s
-    while _time.monotonic() < deadline:
-        n = spark.table(name).count()
-        p = q.lastProgress
-        if n > 0 and p is not None and p.get("numInputRows") == 0:
+
+def _run_available_now(
+    spark: SparkSession,
+    df: DataFrame,
+    name: str,
+    ckpt: str,
+    output_mode: str = "append",
+    n_keys: int | None = None,
+    conf: dict[str, str] | None = None,
+) -> DataFrame:
+    """Run ``df`` once under ``Trigger.AvailableNow`` into the memory sink
+    ``name`` and return ``spark.table(name)``.
+
+    The query starts under ``sized_stream_partitions(n_keys)`` (skipped
+    when ``n_keys`` is None) and under ``conf``; both are restored once
+    the query has started. The run is complete when the query ends by
+    itself, or when its last progress is a committed no-data batch
+    (``_drained``): processing-time timers (q71's ProcessingTimeTimeout,
+    q72's TWS timers) keep such a query running no-data batches forever,
+    so it is stopped there. A failed query re-raises its failure; a run
+    past ``STREAM_DEADLINE_S`` is stopped and raises ``RuntimeError``
+    rather than return a half-filled table."""
+    sizing = (
+        sized_stream_partitions(spark, n_keys) if n_keys is not None
+        else nullcontext()
+    )
+    with sizing, scoped_conf(spark, conf or {}):
+        q = (
+            df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+    deadline = time.monotonic() + STREAM_DEADLINE_S
+    while not q.awaitTermination(0.1):
+        if _drained(q.lastProgress):
+            q.stop()
             break
-        now = _time.monotonic()
-        if n != last:
-            last, stable_since = n, now
-        elif n > 0 and now - stable_since > 5:
-            break
-        _time.sleep(0.1)
-    q.stop()
-    q.awaitTermination(60)
+        if time.monotonic() > deadline:
+            q.stop()
+            q.awaitTermination(60)
+            raise RuntimeError(
+                f"{name} did not finish its availableNow run in "
+                f"{STREAM_DEADLINE_S} s"
+            )
+    return spark.table(name)
+
+
+def _replay(
+    spark: SparkSession, df: DataFrame, tmp: str, src: str,
+    coalesce: int | None = None, schema: str | None = None,
+) -> DataFrame:
+    """Write the batch frame ``df`` to ``tmp/src`` parquet (coalesced to
+    ``coalesce`` files when given) and read it back as a file stream
+    with ``schema``, else ``df``'s own. The events table stores ``ts``
+    as TIMESTAMP_NTZ; its replays pass a schema that reads it back as
+    TIMESTAMP."""
+    path = os.path.join(tmp, src)
+    (df if coalesce is None else df.coalesce(coalesce)).write.parquet(path)
+    return spark.readStream.schema(schema or df.schema).parquet(path)
 
 
 def _finish_stream_run(spark: SparkSession, tmp: str, name: str) -> None:
@@ -101,8 +155,6 @@ def _finish_stream_run(spark: SparkSession, tmp: str, name: str) -> None:
     view for the same query family is dropped here, bounding
     accumulation to one live view per family.
     """
-    import shutil
-
     shutil.rmtree(tmp, ignore_errors=True)
     family = name.rsplit("_", 1)[0]
     old = _prior_views.get(family)
@@ -113,6 +165,10 @@ def _finish_stream_run(spark: SparkSession, tmp: str, name: str) -> None:
             pass
     _prior_views[family] = name
 
+
+_PKT_KEY = ("src_ip", "dst_ip", "src_port", "dst_port", "protocol")
+
+
 STABLE_COLS = [
     f.name
     for f in FLOW_SCHEMA.fields
@@ -122,33 +178,17 @@ STABLE_COLS = [
 
 def q70_streaming_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     packets = events_as_packets(t(spark, sf, "events"))
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q70_stream_")
-    src = os.path.join(tmp, "packets")
-    packets.write.parquet(src)
-
-    stream = spark.readStream.schema(packets.schema).parquet(src)
     flows = streaming_flow_features(
-        stream, gap_s=FLOW_GAP_S, watermark="0 seconds"
+        _replay(spark, packets, tmp, "packets"),
+        gap_s=FLOW_GAP_S, watermark="0 seconds",
     )
-    name = f"q70_flows_{run_id}"
-    with sized_stream_partitions(
-        spark,
-        approx_key_count(
-            packets, "src_ip", "dst_ip", "src_port", "dst_port", "protocol"
-        ),
-    ):
-        q = (
-            flows.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination(300)
+    name = f"q70_flows_{next(_counter)}"
+    out = _run_available_now(
+        spark, flows, name, os.path.join(tmp, "ckpt"), "append",
+        approx_key_count(packets, *_PKT_KEY),
+    )
     _finish_stream_run(spark, tmp, name)
-    out = spark.table(name)
     return out.select(
         *STABLE_COLS, F.unix_micros("timestamp").alias("last_ts_us")
     )
@@ -179,31 +219,16 @@ def q71_stateful_accum(spark: SparkSession, sf: str) -> DataFrame:
     from anti_ddos_spark.streaming.stateful_accum import stateful_flow_features_accum
 
     packets = events_as_packets(t(spark, sf, "events"))
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q71_stream_")
-    src = os.path.join(tmp, "packets")
-    packets.coalesce(4).write.parquet(src)
-
-    stream = spark.readStream.schema(packets.schema).parquet(src)
-    flows = stateful_flow_features_accum(stream, timeout_ms=3_600_000)
-    name = f"q71_flows_{run_id}"
-    with sized_stream_partitions(
-        spark,
-        approx_key_count(
-            packets, "src_ip", "dst_ip", "src_port", "dst_port", "protocol"
-        ),
-    ):
-        q = (
-            flows.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_spinning_stream(spark, q, name)
+    flows = stateful_flow_features_accum(
+        _replay(spark, packets, tmp, "packets", 4), timeout_ms=3_600_000
+    )
+    name = f"q71_flows_{next(_counter)}"
+    out = _run_available_now(
+        spark, flows, name, os.path.join(tmp, "ckpt"), "update",
+        approx_key_count(packets, *_PKT_KEY),
+    )
     _finish_stream_run(spark, tmp, name)
-    out = spark.table(name)
     return out.select(
         *STABLE_COLS, F.unix_micros("timestamp").alias("last_ts_us")
     )
@@ -234,34 +259,15 @@ def q73_streaming_dedup(spark: SparkSession, sf: str) -> DataFrame:
     dropDuplicatesWithinWatermark, state bounded to the horizon;
     eviction unit-proved in tests/test_bounded_dedup.py)."""
     docs = t(spark, sf, "documents").select(F.md5("text").alias("digest"))
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q73_stream_")
-    src = os.path.join(tmp, "docs")
-    docs.coalesce(2).write.parquet(src)
-
-    stream = spark.readStream.schema("digest STRING").parquet(src)
-    deduped = stream.dropDuplicates(["digest"])
-    name = f"q73_digests_{run_id}"
-    with sized_stream_partitions(spark, approx_key_count(docs, "digest")):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    finished = q.awaitTermination(240)
-    if not finished:
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            "q73 streaming dedup did not finish its availableNow run in 240 s "
-            "— returning the half-filled memory table would masquerade as a "
-            "dedup correctness failure"
-        )
+    deduped = _replay(spark, docs, tmp, "docs", 2).dropDuplicates(["digest"])
+    name = f"q73_digests_{next(_counter)}"
+    out = _run_available_now(
+        spark, deduped, name, os.path.join(tmp, "ckpt"), "append",
+        approx_key_count(docs, "digest"),
+    )
     _finish_stream_run(spark, tmp, name)
-    return spark.table(name).select("digest").distinct()
+    return out.select("digest").distinct()
 
 
 Q73_SQL = "SELECT DISTINCT md5(text) AS digest FROM documents"
@@ -287,44 +293,23 @@ def q74_streaming_minhash_buckets(spark: SparkSession, sf: str) -> DataFrame:
     production form: streaming/dedup_stream.py::bounded_minhash_buckets
     (watermark TTL; this bare dropDuplicates is the oracle-replay
     form)."""
+    from anti_ddos_spark.config import LSH_BANDS
     from anti_ddos_spark.operators.dedup import minhash_banded_narrow
 
     docs = t(spark, sf, "documents").select("doc_id", "text")
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q74_stream_")
-    src = os.path.join(tmp, "docs")
-    docs.coalesce(2).write.parquet(src)
-
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    banded = minhash_banded_narrow(stream)
+    banded = minhash_banded_narrow(_replay(spark, docs, tmp, "docs", 2))
     deduped = banded.dropDuplicates(["band_id", "band_key"]).select(
         "band_id", "band_key"
     )
-    from anti_ddos_spark.config import LSH_BANDS
-
-    name = f"q74_buckets_{run_id}"
+    name = f"q74_buckets_{next(_counter)}"
     # bucket-state keys ≤ bands × docs (band_id, band_key pairs)
-    with sized_stream_partitions(
-        spark, LSH_BANDS * approx_key_count(docs, "doc_id")
-    ):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    finished = q.awaitTermination(240)
-    if not finished:
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            "q74 streaming banded-minhash did not finish its availableNow "
-            "run in 240 s"
-        )
+    out = _run_available_now(
+        spark, deduped, name, os.path.join(tmp, "ckpt"), "append",
+        LSH_BANDS * approx_key_count(docs, "doc_id"),
+    )
     _finish_stream_run(spark, tmp, name)
-    return spark.table(name).select("band_id", "band_key").distinct()
+    return out.select("band_id", "band_key").distinct()
 
 
 def _q74_sql() -> str:
@@ -357,9 +342,10 @@ def q72_tws_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     value-state API: all input in one availableNow batch, timers far
     beyond the run → one partial row per flow equal to the whole-flow
     batch features. Requires the RocksDB state store provider (the
-    engine API rejects the HDFS one) and google.protobuf."""
+    engine API rejects the HDFS one), applied to this query's start
+    only, and google.protobuf."""
     from anti_ddos_spark._vendor import ensure_protobuf
-    from anti_ddos_spark.session import use_rocksdb
+    from anti_ddos_spark.session import rocksdb_conf
     from anti_ddos_spark.streaming.stateful_tws import tws_flow_features
 
     if not ensure_protobuf(spark):
@@ -367,35 +353,17 @@ def q72_tws_sessionize(spark: SparkSession, sf: str) -> DataFrame:
             "q72 requires google.protobuf (site-packages or vendored) — "
             "tws_runtime_available() should have prevented registration"
         )
-    use_rocksdb(spark)
     packets = events_as_packets(t(spark, sf, "events"))
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q72_stream_")
-    src = os.path.join(tmp, "packets")
-    packets.coalesce(4).write.parquet(src)
-
-    stream = spark.readStream.schema(packets.schema).parquet(src)
-    flows = tws_flow_features(stream, timeout_ms=3_600_000)
-    name = f"q72_flows_{run_id}"
-    with sized_stream_partitions(
-        spark,
-        approx_key_count(
-            packets, "src_ip", "dst_ip", "src_port", "dst_port", "protocol"
-        ),
-    ):
-        q = (
-            flows.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    # processing-time timers keep availableNow alive (same behavior as
-    # q71's ProcessingTimeTimeout); wait for source exhaustion.
-    _await_spinning_stream(spark, q, name)
+    flows = tws_flow_features(
+        _replay(spark, packets, tmp, "packets", 4), timeout_ms=3_600_000
+    )
+    name = f"q72_flows_{next(_counter)}"
+    out = _run_available_now(
+        spark, flows, name, os.path.join(tmp, "ckpt"), "update",
+        approx_key_count(packets, *_PKT_KEY), conf=rocksdb_conf(),
+    )
     _finish_stream_run(spark, tmp, name)
-    out = spark.table(name)
     return out.select(*STABLE_COLS, F.unix_micros("timestamp").alias("last_ts_us"))
 
 
@@ -483,12 +451,8 @@ def q75_streaming_embedding_buckets(spark: SparkSession, sf: str) -> DataFrame:
         )
     planes = [[float(x) for x in r["embedding"]] for r in plane_rows]
 
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q75_stream_")
-    src = os.path.join(tmp, "vecs")
-    emb.coalesce(2).write.parquet(src)
-
-    stream = spark.readStream.schema(emb.schema).parquet(src).withColumn(
+    stream = _replay(spark, emb, tmp, "vecs", 2).withColumn(
         "_e", as_double(F.col("embedding"))
     )
 
@@ -500,29 +464,14 @@ def q75_streaming_embedding_buckets(spark: SparkSession, sf: str) -> DataFrame:
         .select("s.band_id", "s.sig")
         .dropDuplicates(["band_id", "sig"])
     )
-    name = f"q75_buckets_{run_id}"
+    name = f"q75_buckets_{next(_counter)}"
     # the key space is structural: n_bands × 2^planes_per_band buckets
-    with sized_stream_partitions(
-        spark, NEARDUP_BANDS * (1 << NEARDUP_PLANES_PER_BAND)
-    ):
-        q = (
-            buckets.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    finished = q.awaitTermination(240)
-    if not finished:
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            "q75 streaming embedding buckets did not finish its availableNow "
-            "run in 240 s"
-        )
+    out = _run_available_now(
+        spark, buckets, name, os.path.join(tmp, "ckpt"), "append",
+        NEARDUP_BANDS * (1 << NEARDUP_PLANES_PER_BAND),
+    )
     _finish_stream_run(spark, tmp, name)
-    return spark.table(name).select("band_id", "sig").distinct()
+    return out.select("band_id", "sig").distinct()
 
 
 def _q75_sql() -> str:
@@ -570,12 +519,10 @@ def q76_streaming_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
     )
 
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q76_stream_")
-    src = os.path.join(tmp, "docs")
-    docs.filter(F.col("doc_id") % 100 != 0).coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema("doc_id BIGINT, text STRING").parquet(src)
+    stream = _replay(
+        spark, docs.filter(F.col("doc_id") % 100 != 0), tmp, "docs", 1
+    )
     # streaming aggregates reject count_distinct: dedupe (doc, gram)
     # through dropDuplicates state first, then a plain count
     hits = (
@@ -585,28 +532,15 @@ def q76_streaming_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("int").alias("n_hits"))
     )
-    name = f"q76_hits_{run_id}"
+    name = f"q76_hits_{next(_counter)}"
     # dedup/agg state is per contaminated (doc, gram); docs is the
     # group bound and hits-per-doc are few (benchmark-sized gram set)
-    with sized_stream_partitions(spark, approx_key_count(docs, "doc_id")):
-        q = (
-            hits.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    finished = q.awaitTermination(240)
-    if not finished:
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            "q76 streaming decontamination did not finish its availableNow "
-            "run in 240 s"
-        )
+    out = _run_available_now(
+        spark, hits, name, os.path.join(tmp, "ckpt"), "update",
+        approx_key_count(docs, "doc_id"),
+    )
     _finish_stream_run(spark, tmp, name)
-    return spark.table(name).select("doc_id", "n_hits")
+    return out.select("doc_id", "n_hits")
 
 
 EXTRA_QUERIES: dict[str, Query] = {
@@ -645,31 +579,13 @@ def q78_streaming_pii(spark: SparkSession, sf: str) -> DataFrame:
     from anti_ddos_spark.queries.textops import pii_enriched_text, pii_profile
 
     docs = t(spark, sf, "documents").select("doc_id", "text")
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q78_stream_")
-    src = os.path.join(tmp, "docs")
-    docs.coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema("doc_id BIGINT, text STRING").parquet(src)
-    out = pii_profile(stream.withColumn("_dirty", pii_enriched_text()))
-    name = f"q78_pii_{run_id}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(240)
-    if not finished:
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            "q78 streaming PII scrub did not finish its availableNow run in 240 s"
-        )
+    stream = _replay(spark, docs, tmp, "docs", 1)
+    scrubbed = pii_profile(stream.withColumn("_dirty", pii_enriched_text()))
+    name = f"q78_pii_{next(_counter)}"
+    out = _run_available_now(spark, scrubbed, name, os.path.join(tmp, "ckpt"))
     _finish_stream_run(spark, tmp, name)
-    return spark.table(name)
+    return out
 
 
 def _q78_sql() -> str:
@@ -700,38 +616,19 @@ def q83_streaming_drift(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents").select("doc_id", "text")
     bin_of = drift_bin()
 
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q83_stream_")
-    src = os.path.join(tmp, "docs")
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema("doc_id BIGINT, text STRING").parquet(src)
+    stream = _replay(spark, docs.filter(F.col("doc_id") % 2 == 1), tmp, "docs", 1)
     counts = (
         stream.select(bin_of)
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("n_cand"))
     )
-    name = f"q83_bins_{run_id}"
+    name = f"q83_bins_{next(_counter)}"
     # structural key space: the drift monitor keeps one row per bin
-    with sized_stream_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    finished = q.awaitTermination(240)
-    if not finished:
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            "q83 streaming drift did not finish its availableNow run in 240 s"
-        )
+    cand = _run_available_now(
+        spark, counts, name, os.path.join(tmp, "ckpt"), "update", 8
+    )
     _finish_stream_run(spark, tmp, name)
-
-    cand = spark.table(name)
     base = (
         docs.filter(F.col("doc_id") % 2 == 0)
         .select(bin_of)
@@ -769,45 +666,23 @@ def q88_streaming_rate_anomaly(spark: SparkSession, sf: str) -> DataFrame:
     production monitor uses at shutdown. Hash-checked against the batch
     q87 SQL."""
     ev = t(spark, sf, "events").select("ts")
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q88_stream_")
-    src = os.path.join(tmp, "events")
-    ev.coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema("ts TIMESTAMP").parquet(src)
+    stream = _replay(spark, ev, tmp, "events", 1, "ts TIMESTAMP")
     counts = (
         stream.withWatermark("ts", "0 seconds")
         .groupBy(F.window("ts", "1 minute").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("minute"), "n")
     )
-    name = f"q88_rates_{run_id}"
+    name = f"q88_rates_{next(_counter)}"
     # window-count state: one row per sealed minute in the fixture span
-    with sized_stream_partitions(
-        spark,
+    emitted = _run_available_now(
+        spark, counts, name, os.path.join(tmp, "ckpt"), "append",
         approx_key_count(
             ev.select(F.date_trunc("minute", "ts").alias("m")), "m"
         ),
-    ):
-        q = (
-            counts.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    finished = q.awaitTermination(240)
-    if not finished:
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            "q88 streaming rate monitor did not finish its availableNow "
-            "run in 240 s"
-        )
+    )
     _finish_stream_run(spark, tmp, name)
-
-    emitted = spark.table(name)
     # batch top-up of windows the final watermark left unsealed (append
     # emits only windows strictly before the max event time's watermark)
     all_counts = (
@@ -948,7 +823,6 @@ def q114_bounded_dedup_replay(spark: SparkSession, sf: str) -> DataFrame:
     dedup operator state stays O(horizon), which is the point."""
     from anti_ddos_spark.streaming.dedup_stream import bounded_dedup
 
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q114_stream_")
     src = os.path.join(tmp, "src")
     os.makedirs(src)
@@ -1005,21 +879,13 @@ def q114_bounded_dedup_replay(spark: SparkSession, sf: str) -> DataFrame:
         stream, ["digest"], event_time="ts",
         delay=f"{BOUNDED_DEDUP_DELAY_S} seconds",
     )
-    name = f"q114_bounded_{run_id}"
-    with sized_stream_partitions(spark, approx_key_count(base, "digest")):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("q114 replay did not finish in 300 s")
+    name = f"q114_bounded_{next(_counter)}"
+    out = _run_available_now(
+        spark, deduped, name, os.path.join(tmp, "ckpt"), "append",
+        approx_key_count(base, "digest"),
+    )
     _finish_stream_run(spark, tmp, name)
-    return spark.table(name).select(
+    return out.select(
         "digest", F.unix_micros("ts").alias("emit_us")
     )
 
@@ -1071,39 +937,20 @@ def q115_streaming_scored_flows(spark: SparkSession, sf: str) -> DataFrame:
     from anti_ddos_spark.streaming.pipeline import scored_flow_stream
 
     packets = events_as_packets(t(spark, sf, "events"))
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q115_stream_")
-    src = os.path.join(tmp, "packets")
-    packets.write.parquet(src)
-
-    stream = spark.readStream.schema(packets.schema).parquet(src)
     scored = scored_flow_stream(
-        stream,
+        _replay(spark, packets, tmp, "packets"),
         ThresholdRuleModel(RULE_MIN_PACKETS, RULE_MIN_BYTES),
         mode="session_window",
         gap_s=FLOW_GAP_S,
         watermark="0 seconds",
     )
-    name = f"q115_scored_{run_id}"
-    with sized_stream_partitions(
-        spark,
-        approx_key_count(
-            packets, "src_ip", "dst_ip", "src_port", "dst_port", "protocol"
-        ),
-    ):
-        q = (
-            scored.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("q115 scored stream did not finish in 300 s")
+    name = f"q115_scored_{next(_counter)}"
+    out = _run_available_now(
+        spark, scored, name, os.path.join(tmp, "ckpt"), "append",
+        approx_key_count(packets, *_PKT_KEY),
+    )
     _finish_stream_run(spark, tmp, name)
-    out = spark.table(name)
     from anti_ddos_spark.ml import volumetric_columns
 
     n_pkts, n_bytes = volumetric_columns()
@@ -1151,34 +998,23 @@ def _stream_stream_interval_join(
     differ ONLY in join type — one definition of the mechanics so a fix
     to timeouts/watermark/interval applies to every form at once."""
     ev = t(spark, sf, "events").select("event_id", "user_id", "ts")
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix=f"{family}_stream_")
-    a_src = os.path.join(tmp, "a")
-    b_src = os.path.join(tmp, "b")
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(a_src)
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(b_src)
 
-    schema = "event_id BIGINT, user_id BIGINT, ts TIMESTAMP"
-    a = (
-        spark.readStream.schema(schema)
-        .parquet(a_src)
-        .withWatermark("ts", "0 seconds")
-        .select(
-            F.col("event_id").alias("a_id"),
-            F.col("user_id").alias("a_user"),
-            F.col("ts").alias("a_ts"),
+    def side(parity: int, s: str) -> DataFrame:
+        return (
+            _replay(
+                spark, ev.filter(F.col("event_id") % 2 == parity), tmp, s, 1,
+                "event_id BIGINT, user_id BIGINT, ts TIMESTAMP",
+            )
+            .withWatermark("ts", "0 seconds")
+            .select(
+                F.col("event_id").alias(f"{s}_id"),
+                F.col("user_id").alias(f"{s}_user"),
+                F.col("ts").alias(f"{s}_ts"),
+            )
         )
-    )
-    b = (
-        spark.readStream.schema(schema)
-        .parquet(b_src)
-        .withWatermark("ts", "0 seconds")
-        .select(
-            F.col("event_id").alias("b_id"),
-            F.col("user_id").alias("b_user"),
-            F.col("ts").alias("b_ts"),
-        )
-    )
+
+    a, b = side(1, "a"), side(0, "b")
     joined = a.join(
         b,
         (F.col("a_user") == F.col("b_user"))
@@ -1189,25 +1025,14 @@ def _stream_stream_interval_join(
         "a_id", "b_id", F.coalesce("a_user", "b_user").alias("user_id")
     )
 
-    name = f"{family}_{run_id}"
+    name = f"{family}_{next(_counter)}"
     # join state is keyed by user within the ±60 s interval horizon
-    with sized_stream_partitions(spark, approx_key_count(ev, "user_id")):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    if not q.awaitTermination(240):
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            f"{family} stream-stream join did not finish in 240 s"
-        )
+    out = _run_available_now(
+        spark, joined, name, os.path.join(tmp, "ckpt"), "append",
+        approx_key_count(ev, "user_id"),
+    )
     _finish_stream_run(spark, tmp, name)
-    return spark.table(name)
+    return out
 
 
 # --- q118: stream-stream LEFT OUTER join (watermark-gated nulls) ----------
@@ -1292,13 +1117,9 @@ def q128_streaming_distinct_users(spark: SparkSession, sf: str) -> DataFrame:
     small ABSOLUTE register-collision error the relative band cannot
     express."""
     ev = t(spark, sf, "events").select("ts", "user_id")
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q128_stream_")
-    src = os.path.join(tmp, "events")
-    ev.coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema("ts TIMESTAMP, user_id BIGINT").parquet(
-        src
+    stream = _replay(
+        spark, ev, tmp, "events", 1, "ts TIMESTAMP, user_id BIGINT"
     )
     est = (
         stream.withWatermark("ts", "0 seconds")
@@ -1308,33 +1129,15 @@ def q128_streaming_distinct_users(spark: SparkSession, sf: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("minute"), "est")
     )
-    name = f"q128_distinct_{run_id}"
+    name = f"q128_distinct_{next(_counter)}"
     # sketch state: one HLL++ partial per sealed minute window
-    with sized_stream_partitions(
-        spark,
+    emitted = _run_available_now(
+        spark, est, name, os.path.join(tmp, "ckpt"), "append",
         approx_key_count(
             ev.select(F.date_trunc("minute", "ts").alias("m")), "m"
         ),
-    ):
-        q = (
-            est.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    finished = q.awaitTermination(240)
-    if not finished:
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            "q128 streaming distinct monitor did not finish its "
-            "availableNow run in 240 s"
-        )
+    )
     _finish_stream_run(spark, tmp, name)
-
-    emitted = spark.table(name)
     batch = ev.select(F.date_trunc("minute", "ts").alias("minute"), "user_id")
     tail = (
         batch.join(emitted.select("minute"), "minute", "left_anti")
@@ -1464,39 +1267,19 @@ def q139_streaming_bpe_tokens(spark: SparkSession, sf: str) -> DataFrame:
 
     merges = _frozen_bpe_merges()
     docs = t(spark, sf, "documents").select("doc_id", "text")
-
-    run_id = next(_counter)
     tmp = tempfile.mkdtemp(prefix="q139_stream_")
-    src = os.path.join(tmp, "docs")
-    docs.coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema("doc_id BIGINT, text STRING").parquet(src)
+    stream = _replay(spark, docs, tmp, "docs", 1)
     toks = tokens_expr("text", merges)
-    out = stream.select(
+    tokenized = stream.select(
         "doc_id",
         F.size(words_expr(F.col("text"))).alias("n_words"),
         F.size(toks).alias("n_tokens"),
         F.array_join(F.slice(toks, 1, 8), " ").alias("head_tokens"),
     )
-    name = f"q139_toks_{run_id}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(240)
-    if not finished:
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            "q139 streaming tokenization did not finish its availableNow "
-            "run in 240 s"
-        )
+    name = f"q139_toks_{next(_counter)}"
+    out = _run_available_now(spark, tokenized, name, os.path.join(tmp, "ckpt"))
     _finish_stream_run(spark, tmp, name)
-    return spark.table(name)
+    return out
 
 
 def _q139_sql() -> str:
@@ -1600,6 +1383,12 @@ def _commit_cdc_orders_fixture(
     sink(b1, 0)
     sink(b2, 1)
     sink(b3, 2)
+    if merge_on_read:
+        # the fixture must actually exercise the stack path: batches 2-3
+        # append to stacks (depth ≤ 2 < MOR_MAX_STACK_DEPTH, no folds)
+        assert any(
+            tbl._resolved(tbl.current_version())["bucket_deltas"].values()
+        ), f"{app_id} fixture produced no delta stacks"
     return root
 
 
@@ -1617,36 +1406,34 @@ def q140_streaming_cdf(spark: SparkSession, sf: str) -> DataFrame:
     a reader that replayed an orphan version, missed a touched bucket,
     emitted a rewritten-but-unchanged row, or mis-stamped a version
     breaks the hash."""
-    import shutil
+    return _cdf_change_counts(spark, sf, "q140_cdf")
 
+
+def _cdf_change_counts(
+    spark: SparkSession, sf: str, family: str, **fixture
+) -> DataFrame:
+    """The body q140 and q146 share: commit the CDC orders fixture
+    (``fixture`` is passed to ``_commit_cdc_orders_fixture``), replay the
+    whole version chain through the ``versioned_cdf`` stream, and count
+    the change rows per (version, op)."""
     from anti_ddos_spark.sources.cdf import register_cdf_source
 
-    run_id = next(_counter)
-    tmp = tempfile.mkdtemp(prefix="q140_cdf_")
-    root = _commit_cdc_orders_fixture(spark, sf, tmp, "q140")
-
+    tmp = tempfile.mkdtemp(prefix=f"{family}_")
+    root = _commit_cdc_orders_fixture(
+        spark, sf, tmp, family.split("_")[0], **fixture
+    )
     register_cdf_source(spark)
-    name = f"q140_cdf_{run_id}"
-    q = (
+    name = f"{family}_{next(_counter)}"
+    changes = _run_available_now(
+        spark,
         spark.readStream.format("versioned_cdf")
         .option("root", root)
         .option("key", "o_orderkey")
         .option("start_version", -1)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .load(),
+        name,
+        os.path.join(tmp, "ckpt"),
     )
-    finished = q.awaitTermination(240)
-    if not finished:
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            "q140 CDF replay did not finish its availableNow run in 240 s"
-        )
-    changes = spark.table(name)
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     out = changes.groupBy("_version", "_op").agg(
         F.count(F.lit(1)).alias("n_changes"),
@@ -1658,7 +1445,6 @@ def q140_streaming_cdf(spark: SparkSession, sf: str) -> DataFrame:
     # the scratch table root goes away
     rows = out.collect()
     _finish_stream_run(spark, tmp, name)
-    shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -1716,57 +1502,9 @@ def q146_mor_streaming_cdf(spark: SparkSession, sf: str) -> DataFrame:
     live stacks, row volume no longer scales with sf — and the oracle
     is q140's derivation WITH the same slice (Q146_SQL below), a
     deliberate hash re-pin."""
-    import shutil
-
-    from anti_ddos_spark.sources.cdf import register_cdf_source
-    from anti_ddos_spark.sources.versioned import VersionedTable
-
-    run_id = next(_counter)
-    tmp = tempfile.mkdtemp(prefix="q146_morcdf_")
-    root = _commit_cdc_orders_fixture(
-        spark, sf, tmp, "q146", merge_on_read=True, max_key=6000
+    return _cdf_change_counts(
+        spark, sf, "q146_morcdf", merge_on_read=True, max_key=6000
     )
-    # the fixture must actually exercise the stack path: batches 2-3
-    # append to stacks (depth ≤ 2 < MOR_MAX_STACK_DEPTH, no folds)
-    tbl = VersionedTable(root)
-    assert any(
-        tbl._resolved(tbl.current_version())["bucket_deltas"].values()
-    ), "q146 fixture produced no delta stacks"
-
-    register_cdf_source(spark)
-    name = f"q146_morcdf_{run_id}"
-    q = (
-        spark.readStream.format("versioned_cdf")
-        .option("root", root)
-        .option("key", "o_orderkey")
-        .option("start_version", -1)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(240)
-    if not finished:
-        q.stop()
-        q.awaitTermination(60)
-        raise RuntimeError(
-            "q146 MOR CDF replay did not finish its availableNow run "
-            "in 240 s"
-        )
-    changes = spark.table(name)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    out = changes.groupBy("_version", "_op").agg(
-        F.count(F.lit(1)).alias("n_changes"),
-        F.sum(cents).alias("total_cents"),
-        F.min("o_orderkey").alias("min_key"),
-        F.max("o_orderkey").alias("max_key"),
-    )
-    rows = out.collect()
-    _finish_stream_run(spark, tmp, name)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, out.schema)
 
 
 # --- q143: incremental view maintenance from the change feed (round 10) ----
@@ -1805,8 +1543,6 @@ def q143_ivm_maintained_aggregate(spark: SparkSession, sf: str) -> DataFrame:
     O(table) — the whole point; the view state is O(groups), sharded by
     the aggregation's own hash exchange across the cluster.
     """
-    import shutil
-
     from anti_ddos_spark.sources.cdf import register_cdf_source
     from anti_ddos_spark.sources.versioned import VersionedTable
 
@@ -1826,7 +1562,6 @@ def q143_ivm_maintained_aggregate(spark: SparkSession, sf: str) -> DataFrame:
         F.lit(-1)
     )
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    name = None
     # view state is one row per customer group; the partition count is
     # pinned into the shared checkpoint at run 0, so size it ONCE around
     # the whole restart chain (an upper bound from the source table —
@@ -1852,29 +1587,13 @@ def q143_ivm_maintained_aggregate(spark: SparkSession, sf: str) -> DataFrame:
             )
             .filter(F.col("n_orders") != 0)
         )
-        with sized_stream_partitions(spark, n_groups):
-            q = (
-                view.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-        finished = q.awaitTermination(240)
-        if not finished:
-            q.stop()
-            q.awaitTermination(60)
-            raise RuntimeError(
-                f"q143 IVM run {i} did not finish its availableNow pass "
-                "in 240 s"
-            )
+        out = _run_available_now(
+            spark, view, name, os.path.join(tmp, "ckpt"), "complete", n_groups
+        )
         if i < len(chain) - 1:
             spark.catalog.dropTempView(name)
-    out = spark.table(name)
     rows = out.collect()
     _finish_stream_run(spark, tmp, name)
-    shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 

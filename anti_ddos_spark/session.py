@@ -12,6 +12,8 @@ applies — AQE re-plans shuffle partition counts at runtime so the static
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -30,9 +32,9 @@ def rocksdb_conf() -> dict[str, str]:
     stateful_tws.py). Mirrors the reference's HDFS state dir choice
     (spark_app/main.py:1000) upgraded to the scale-safe backend.
 
-    Provider is read per-query at stream start, so this can be applied
-    with spark.conf.set(...) on a live session (see use_rocksdb()) or
-    passed as extra_conf to get_spark().
+    Provider is read per-query at stream start, so this can be scoped to
+    one query's start with scoped_conf() on a live session or passed as
+    extra_conf to get_spark().
     """
     return {
         "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
@@ -40,12 +42,6 @@ def rocksdb_conf() -> dict[str, str]:
         # full SST uploads — the production default for large state
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
     }
-
-
-def use_rocksdb(spark: SparkSession) -> None:
-    """Switch subsequent streaming queries on this session to RocksDB."""
-    for k, v in rocksdb_conf().items():
-        spark.conf.set(k, v)
 
 
 # Measured on the round-7 streaming cardinality ladder (PERF.md): a
@@ -91,12 +87,40 @@ def state_partitions_for(
     return min(max(want, floor), max(cores, floor))
 
 
+# Session conf is global to every thread that shares the session: one
+# lock serializes the scoped changes below, so a query start pins the
+# values its own block set, not another thread's.
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Apply ``conf`` to the session for the duration of the block (a
+    streaming query START: Structured Streaming reads the conf at query
+    creation and pins state-relevant keys into the checkpoint). On exit
+    each key gets its previous value back, and a key that was unset is
+    unset again, so batch plans and later queries are untouched.
+
+    The block holds a module-level re-entrant lock: a second thread that
+    enters any scoped_conf on the process waits until the first exits,
+    so concurrent query starts cannot read each other's values."""
+    with _CONF_LOCK:
+        old = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+
 def sized_stream_partitions(spark: SparkSession, n_keys: int):
-    """Context manager applying ``state_partitions_for(n_keys)`` to
-    ``spark.sql.shuffle.partitions`` for the duration of a streaming
-    query START (Structured Streaming reads the conf at query creation
-    and pins it into the checkpoint; the previous value is restored on
-    exit, so batch plans and later queries are untouched).
+    """``scoped_conf`` of ``spark.sql.shuffle.partitions`` to
+    ``state_partitions_for(n_keys)`` around a streaming query start.
 
     This ships the round-7 cardinality policy into the query fns
     instead of leaving it a documented knob: stateful micro-batches pay
@@ -108,25 +132,11 @@ def sized_stream_partitions(spark: SparkSession, n_keys: int):
     the 2× run-to-run scatter collapsed with it. On a real-cardinality
     stream the same call sizes UP (keys/3200, capped at cores).
 
-    Contract: single-threaded query start only. The conf is
-    session-global, so two concurrent query starts on one session race
-    — one query can pin the other's partition count into its
-    checkpoint permanently. Fine for this engine's sequential query
-    fns and the bench harness; serialize externally (or use separate
-    sessions) before starting streams from multiple driver threads."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _ctx():
-        key = "spark.sql.shuffle.partitions"
-        old = spark.conf.get(key)
-        spark.conf.set(key, str(state_partitions_for(n_keys)))
-        try:
-            yield
-        finally:
-            spark.conf.set(key, old)
-
-    return _ctx()
+    Concurrent starts from several driver threads on one session are
+    serialized by scoped_conf's lock: each start pins its own count."""
+    return scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": str(state_partitions_for(n_keys))}
+    )
 
 
 def approx_key_count(df, *cols: str) -> int:

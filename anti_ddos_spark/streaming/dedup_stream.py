@@ -20,7 +20,7 @@ a bucket — downstream candidate logic is unaffected, only memory is.
 State size: one row per distinct key with event time inside the
 horizon, independent of total stream length — O(arrival_rate x delay)
 instead of O(corpus). Pair with the RocksDB provider
-(session.use_rocksdb) when even the horizon working set exceeds heap.
+(session.rocksdb_conf) when even the horizon working set exceeds heap.
 
 Eviction is unit-proved in tests/test_bounded_dedup.py by asserting
 ``numRowsRemoved > 0`` and a shrinking ``numRowsTotal`` in the

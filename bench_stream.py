@@ -82,7 +82,7 @@ def main() -> None:
     # dominates), 32 at 100k (8 partitions strand 24 of 32 cores while
     # each task walks 12.5k groups; measured 20x recovery in PERF.md's
     # round-7 ladder, now automatic). Pass the 6th arg to override.
-    from anti_ddos_spark.session import get_spark, state_partitions_for
+    from anti_ddos_spark.session import get_spark, rocksdb_conf, state_partitions_for
 
     n_parts = (
         int(sys.argv[6]) if len(sys.argv) > 6
@@ -95,12 +95,12 @@ def main() -> None:
     # Streaming micro-batches are small; 32 shuffle partitions would give
     # sub-MB state partitions and per-task overhead dominates. 8 is sized
     # for local mode; a cluster deployment scales this with executor count.
-    spark = get_spark(app_name="bench_stream", shuffle_partitions=n_parts)
+    spark = get_spark(
+        app_name="bench_stream",
+        shuffle_partitions=n_parts,
+        extra_conf=rocksdb_conf() if provider == "rocksdb" else None,
+    )
     spark.sparkContext.setLogLevel("ERROR")
-    if provider == "rocksdb":
-        from anti_ddos_spark.session import use_rocksdb
-
-        use_rocksdb(spark)
 
     model = _train_soak_model(spark) if with_score else None
 
