@@ -20,5 +20,3 @@ tested locally against small scale factors with a DuckDB oracle.
 """
 
 __version__ = "0.1.0"
-
-from anti_ddos_spark.session import get_spark  # noqa: F401

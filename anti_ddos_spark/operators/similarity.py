@@ -358,7 +358,7 @@ def lsh_neardup_pairs(
     )
     bcast_cap = int(_os.environ.get("SPARK_GRAFT_LSH_BCAST_MB", "256")) << 20
     total = local_scan_bytes(vectors, cap=bcast_cap)
-    if total is not None:
+    if total:
         b = F.broadcast(b)
     first_collide = F.array_position(
         F.zip_with(
@@ -387,7 +387,7 @@ def lsh_neardup_pairs(
     eb = emb.select(
         F.col(id_col).alias("id_b"), F.col("e").alias("eb"), F.col("nrm").alias("nb")
     )
-    if total is not None:
+    if total:
         ea, eb = F.broadcast(ea), F.broadcast(eb)
     pairs = cand.join(ea, "id_a").join(eb, "id_b")
     raw = F.when(

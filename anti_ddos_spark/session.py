@@ -7,6 +7,12 @@ handling, Arrow-backed Python exchange, Kryo, UTC session timezone.
 Local test mode runs ``local[N]``; on a real cluster the same config block
 applies — AQE re-plans shuffle partition counts at runtime so the static
 ``spark.sql.shuffle.partitions`` is only a ceiling for the first stage.
+
+Python workers start through ``anti_ddos_spark.worker_daemon``, which
+imports PySpark from the installed package instead of ``$SPARK_HOME``'s
+archives, so the workers must be able to import ``anti_ddos_spark``
+(the driver's working directory or ``PYTHONPATH``), as engine UDFs
+already require.
 """
 
 from __future__ import annotations
@@ -210,6 +216,9 @@ def get_spark(
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_memory())
+        # Python workers import PySpark from the installed package, not
+        # from $SPARK_HOME's archives (see worker_daemon).
+        .config("spark.python.daemon.module", "anti_ddos_spark.worker_daemon")
     )
     if os.environ.get("SPARK_GRAFT_ROCKSDB", "") not in ("", "0"):
         for k, v in rocksdb_conf().items():

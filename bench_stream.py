@@ -59,6 +59,32 @@ def _train_soak_model(spark):
     return model
 
 
+# Longest wait past the soak window for the in-flight batch to commit.
+STOP_WAIT_S = 120
+
+
+def _stop_at_batch_boundary(q) -> None:
+    """Stop ``q`` once no trigger is running or the batch running at the
+    call has committed (whichever comes first, at most STOP_WAIT_S): a
+    stop mid-batch interrupts the state commit, which RocksDB logs as
+    CANNOT_COMMIT and InterruptedException traces. A query that runs
+    behind its trigger starts the next batch at once, so a new progress
+    entry is the only boundary it shows."""
+
+    def last_batch():
+        return q.lastProgress["batchId"] if q.lastProgress else None
+
+    committed = last_batch()
+    deadline = time.monotonic() + STOP_WAIT_S
+    while (
+        q.status["isTriggerActive"]
+        and last_batch() == committed
+        and time.monotonic() < deadline
+    ):
+        time.sleep(0.01)
+    q.stop()
+
+
 def main() -> None:
     rows_per_sec = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
     duration_s = int(sys.argv[2]) if len(sys.argv) > 2 else 30
@@ -135,14 +161,19 @@ def main() -> None:
         .start()
     )
     time.sleep(duration_s)
+    _stop_at_batch_boundary(q)
     progress = [p for p in q.recentProgress]
-    q.stop()
     q.awaitTermination(30)
 
     # skip the first 5 batches (codegen + state warmup)
     steady = progress[5:] if len(progress) > 8 else progress
     proc = [p["processedRowsPerSecond"] for p in steady if p["numInputRows"] > 0]
     durs = [p["batchDuration"] / 1000.0 for p in steady if p["numInputRows"] > 0]
+    if not proc:
+        sys.exit(
+            f"bench_stream: no batch with input finished in {len(progress)} "
+            f"batches ({duration_s} s soak + up to {STOP_WAIT_S} s for the last batch)"
+        )
     backlog_batches = [p for p in steady if p["batchDuration"] > 2_000 * trigger_s]
     out = {
         "metric": "stream_sustained_rows_per_sec",

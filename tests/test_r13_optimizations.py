@@ -160,6 +160,25 @@ def test_neardup_verify_spread_gated_on_local_scan(spark, tmp_path):
     assert a == b
 
 
+def test_neardup_broadcast_gated_on_local_scan(spark, tmp_path):
+    """The attach/build sides are broadcast only when the input's leaf
+    files are known and fit the gate. A frame with no input files reads
+    0 leaf bytes, which says nothing about its size: it gets no hint."""
+    from anti_ddos_spark.operators.similarity import lsh_neardup_pairs
+
+    df = _vecs(spark)
+    path = str(tmp_path / "vecs.parquet")
+    df.write.parquet(path)
+
+    def n_broadcast_hints(frame):
+        plan = frame._jdf.queryExecution().analyzed().toString()
+        return plan.count("strategy=broadcast")
+
+    assert n_broadcast_hints(lsh_neardup_pairs(df, 0.0, 2, 4, planes="data")) == 0
+    scan = spark.read.parquet(path)
+    assert n_broadcast_hints(lsh_neardup_pairs(scan, 0.0, 2, 4, planes="data")) == 3
+
+
 def test_neardup_min_band_dedup_matches_distinct(spark, tmp_path):
     """r14: the candidate `.distinct()` (one full exchange of the pair
     set) was replaced by keeping a pair only at its FIRST colliding
