@@ -70,12 +70,13 @@ def _header_len() -> Column:
     return F.when(F.col("protocol") == 6, F.lit(20)).otherwise(F.lit(8))
 
 
-# Expression-construction memo. Building the 77 aggregate Columns is
-# ~1.5 s of driver-side py4j round-trips (measured, PERF.md §q24) and the
-# result depends only on `mode` — Catalyst Columns are immutable
-# expression trees, safely shared across plans. Keyed by the py4j gateway
-# so a restarted JVM in the same process never sees stale object refs.
-_AGG_MEMO: dict[tuple, list[Column]] = {}
+# Expression-construction memo, shared by every fixed Column tree in the
+# engine. Building the 77 aggregate Columns is ~1.5 s of driver-side py4j
+# round-trips (measured, PERF.md §q24) and the result depends only on
+# `mode` — Catalyst Columns are immutable expression trees, safely shared
+# across plans. Keyed by the caller's shape key plus the py4j gateway so
+# a restarted JVM in the same process never sees stale object refs.
+_COLUMN_MEMO: dict[tuple, list[Column]] = {}
 
 
 def _jvm_key() -> int | None:
@@ -85,11 +86,12 @@ def _jvm_key() -> int | None:
     return id(sc._gateway) if sc is not None else None
 
 
-def _memoized(name: str, mode: str, build) -> list[Column]:
-    key = (name, mode, _jvm_key())
-    cols = _AGG_MEMO.get(key)
+def _memoized(key: tuple, build) -> list[Column]:
+    """``build()``'s Columns, built once per (``key``, JVM)."""
+    full = (*key, _jvm_key())
+    cols = _COLUMN_MEMO.get(full)
     if cols is None:
-        cols = _AGG_MEMO[key] = build()
+        cols = _COLUMN_MEMO[full] = build()
     return list(cols)  # shallow copy: callers may extend the list
 
 
@@ -101,7 +103,7 @@ def flow_feature_aggs(mode: str = "faithful") -> list[Column]:
     """
     if mode not in ("faithful", "exact"):
         raise ValueError(f"mode must be 'faithful' or 'exact', got {mode!r}")
-    return _memoized("flow", mode, lambda: _build_flow_feature_aggs(mode))
+    return _memoized(("flow", mode), lambda: _build_flow_feature_aggs(mode))
 
 
 def _build_flow_feature_aggs(mode: str) -> list[Column]:
@@ -288,7 +290,7 @@ def identity_aggs() -> list[Column]:
     All forward packets share the session-initiator 4-tuple, so any
     fwd-conditional first() is deterministic. Memoized per JVM.
     """
-    return _memoized("identity", "", _build_identity_aggs)
+    return _memoized(("identity",), _build_identity_aggs)
 
 
 def _build_identity_aggs() -> list[Column]:

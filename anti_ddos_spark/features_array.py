@@ -21,30 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-from anti_ddos_spark.features import BULK_BYTES_THRESHOLD, MIN_DURATION_S
-
-# Struct field order IS the sort order — mirrors normalize.ORDER_COLS.
-PKT_FIELDS = [
-    "ts_us",
-    "src_ip",
-    "src_port",
-    "dst_ip",
-    "dst_port",
-    "tcp_seq",
-    "length",
-    "protocol",
-    "tcp_win",
-    "tcp_len",
-    "udp_len",
-    "fin_flag",
-    "syn_flag",
-    "rst_flag",
-    "psh_flag",
-    "ack_flag",
-    "urg_flag",
-    "cwr_flag",
-    "ece_flag",
-]
+from anti_ddos_spark.features import BULK_BYTES_THRESHOLD, MIN_DURATION_S, _memoized
 
 
 def pkt_struct() -> Column:
@@ -147,22 +124,13 @@ def array_flow_features() -> list[Column]:
     collect_list aggregation. Field-for-field equal to the batch
     window+agg implementation (proven by the batch≡streaming tests).
 
-    Memoized per JVM like features._AGG_MEMO: building the ~80 deep
+    Memoized per JVM (features._memoized): building the ~80 deep
     higher-order Columns costs ~2-3 s of driver py4j round-trips per
     call (measured r13 — the dominant build cost of every streaming
     sessionizer start, which constructs this tree for each new query).
     The input is always the unresolved name ``pkts``, so one tree
     serves every caller's DataFrame."""
-    from anti_ddos_spark.features import _jvm_key
-
-    key = _jvm_key()
-    cols = _ARRAY_FEATS_MEMO.get(key)
-    if cols is None:
-        cols = _ARRAY_FEATS_MEMO[key] = _build_array_flow_features()
-    return list(cols)
-
-
-_ARRAY_FEATS_MEMO: dict[int | None, list[Column]] = {}
+    return _memoized(("array_flow_features",), _build_array_flow_features)
 
 
 def _build_array_flow_features() -> list[Column]:

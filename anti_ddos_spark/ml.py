@@ -152,8 +152,8 @@ class ThresholdRuleModel:
     hash-checked streaming-scoring query (q115) swaps in this rule to
     pin the SCORING STAGE itself — model broadcast-free transform on an
     unbounded DataFrame, label post-processing, append-mode emission —
-    while q50/bench_stream keep covering the RF path (metrics +
-    throughput). Mirrors the reference's predict stage shape
+    while q50 (metrics) and perfbench's live_accum workload (the
+    in-stream RF, end to end) keep covering the RF path. Mirrors the reference's predict stage shape
     (spark_app/main.py:1087-1090: transform → prediction → label)."""
 
     def __init__(self, min_packets: int = 3, min_bytes: int = 1024):

@@ -1,24 +1,18 @@
-"""Flow-key normalization and packet direction detection.
+"""Canonical flow key and the intra-flow packet order.
 
 Reference semantics (spark_app/main.py:234-250): the canonical
 bidirectional flow key orders the two (ip, port) endpoints so the
 lexicographically-lesser IP comes first, while the original columns are
 kept to detect per-packet direction. Direction (main.py:665-674): a packet
 is *forward* iff its 4-tuple equals the orientation of the first packet
-ever seen for the flow.
-
-Our build keeps both computations Catalyst-native. Direction uses a single
-analytic window over the flow key (no per-key Python state): the first row
-in timestamp order defines the orientation. Crucially the direction-local
-IATs are computed with conditional `last(...) over (rows between unbounded
-preceding and 1 preceding)` inside the SAME window partitioning, so the
-whole packet→flow pipeline needs exactly ONE shuffle (hash on the flow
-key) — the later groupBy reuses the window's partitioning.
+ever seen for the flow — computed per flow by the sessionizers
+(sessionize._session_col_seq, the streaming state functions) over the
+key and order defined here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 # Canonical flow-key column names produced by normalize_flow_key.
 FLOW_KEY_COLS = ["flow_src_ip", "flow_src_port", "flow_dst_ip", "flow_dst_port", "protocol"]
@@ -29,7 +23,7 @@ FLOW_KEY_COLS = ["flow_src_ip", "flow_src_port", "flow_dst_ip", "flow_dst_port",
 ORDER_COLS = ["timestamp", "src_ip", "src_port", "dst_ip", "dst_port", "tcp_seq"]
 
 
-def _lesser_src(df_or_cols=None) -> Column:
+def _lesser_src() -> Column:
     """True when the packet's src endpoint is the canonical 'first' one."""
     return F.col("src_ip") < F.col("dst_ip")
 
@@ -40,7 +34,7 @@ def normalize_flow_key(packets: DataFrame) -> DataFrame:
     Faithful to main.py:239-250: comparison is on the IP *strings* and the
     port follows its IP (equal IPs take the else-branch, i.e. swap).
     Column trees are fixed (unresolved names only) — memoized per JVM
-    like features._AGG_MEMO (r14: py4j Column construction is the
+    (features._memoized; r14: py4j Column construction is the
     dominant per-run build cost of the flow family, guide §7.3)."""
     from anti_ddos_spark.features import _memoized
 
@@ -53,52 +47,5 @@ def normalize_flow_key(packets: DataFrame) -> DataFrame:
             F.when(lesser, F.col("dst_port")).otherwise(F.col("src_port")).alias("flow_dst_port"),
         ]
 
-    return packets.select("*", *_memoized("normalize_flow_key", "", build))
+    return packets.select("*", *_memoized(("normalize_flow_key",), build))
 
-
-def flow_window() -> Window:
-    """Analytic window over one flow, in deterministic packet order."""
-    return Window.partitionBy(*FLOW_KEY_COLS).orderBy(*ORDER_COLS)
-
-
-def with_direction(packets: DataFrame) -> DataFrame:
-    """Add ``is_fwd`` (packet matches first-seen orientation) and ``ts_us``.
-
-    Requires normalize_flow_key() columns. One window, one shuffle.
-    """
-    w = flow_window()
-    first_src_ip = F.first("src_ip").over(w)
-    first_src_port = F.first("src_port").over(w)
-    # First packet defines forward orientation (main.py:534-546,665-674).
-    # Within one flow key the endpoint *pair* is fixed, so matching
-    # (src_ip, src_port) suffices to match the full 4-tuple.
-    is_fwd = (F.col("src_ip") == first_src_ip) & (F.col("src_port") == first_src_port)
-    return (
-        packets.withColumn("ts_us", F.unix_micros("timestamp"))
-        .withColumn("is_fwd", is_fwd)
-    )
-
-
-def with_iats(packets: DataFrame) -> DataFrame:
-    """Add inter-arrival times in µs: flow-level and direction-level.
-
-    ``flow_iat_us``: gap to the previous packet of the flow.
-    ``dir_iat_us``: gap to the previous packet of the SAME direction —
-    computed with conditional last() over the flow window (not a second
-    window keyed by (flow, direction)), so no extra shuffle is introduced.
-    """
-    w = flow_window()
-    prev_rows = w.rowsBetween(Window.unboundedPreceding, -1)
-    prev_ts = F.lag("ts_us").over(w)
-    prev_fwd_ts = F.last(F.when(F.col("is_fwd"), F.col("ts_us")), ignorenulls=True).over(prev_rows)
-    prev_bwd_ts = F.last(F.when(~F.col("is_fwd"), F.col("ts_us")), ignorenulls=True).over(prev_rows)
-    prev_dir_ts = F.when(F.col("is_fwd"), prev_fwd_ts).otherwise(prev_bwd_ts)
-    return (
-        packets.withColumn("flow_iat_us", F.col("ts_us") - prev_ts)
-        .withColumn("dir_iat_us", F.col("ts_us") - prev_dir_ts)
-    )
-
-
-def prepare_packets(packets: DataFrame) -> DataFrame:
-    """normalize key → direction → IATs; the single pre-aggregation pass."""
-    return with_iats(with_direction(normalize_flow_key(packets)))

@@ -15,8 +15,8 @@ Scale posture (the part that matters at 100 TB):
 - The corpus-sized work is ONE aggregate: the word histogram (pretoken
   explode → map-side-combined count, a single shuffle on ``word``).
 - Every learning iteration after that runs on the V-row histogram —
-  Heaps-bounded (V ~ n^0.5 on real text; scripts/scale_probe.py
-  ``--fixture zipf`` measures exactly this growth), NOT corpus-bounded
+  Heaps-bounded (V ~ n^0.5 on real text; the zipf fixture's growth is
+  pinned in tests/test_zipf_fixture.py), NOT corpus-bounded
   — and collects exactly ONE row per iteration (the argmax pair), the
   same bounded-collect class as the k-means centroid loop.
 - Tokenization applies the k learned merges as a chain of k Catalyst

@@ -26,6 +26,7 @@ import os
 from pyspark.sql import Column, DataFrame, functions as F
 
 from anti_ddos_spark.config import LSH_BANDS, MINHASH_K, SIMHASH_BITS
+from anti_ddos_spark.features import _memoized
 
 SHINGLE_W = 3  # words per shingle
 
@@ -33,23 +34,7 @@ SHINGLE_W = 3  # words per shingle
 # costs ~1.3 s per call in py4j round-trips (40% of q35's bench wall —
 # the same construction-cost disease PERF.md's q24 attribution found).
 # Catalyst Columns are immutable expression trees, so the built lists are
-# memoized per (shape key, JVM) exactly like features._AGG_MEMO.
-_EXPR_MEMO: dict[tuple, list[Column]] = {}
-
-
-def _jvm_key() -> int | None:
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    return id(sc._gateway) if sc is not None else None
-
-
-def _memoized_exprs(key: tuple, build) -> list[Column]:
-    full = (*key, _jvm_key())
-    cols = _EXPR_MEMO.get(full)
-    if cols is None:
-        cols = _EXPR_MEMO[full] = build()
-    return list(cols)
+# memoized per (shape key, JVM) with features._memoized.
 
 
 def words(text: Column) -> Column:
@@ -127,7 +112,7 @@ def minhash_signature(text: Column, k: int = MINHASH_K) -> list[Column]:
 
 def lsh_bands(sig_cols: list[str], bands: int = LSH_BANDS) -> Column:
     """Band digests: md5 of the concatenated signature rows per band.
-    Memoized per (columns, bands, JVM) — see _EXPR_MEMO."""
+    Memoized per (columns, bands, JVM) — see features._memoized."""
 
     def build() -> list[Column]:
         rows_per = len(sig_cols) // bands
@@ -148,7 +133,7 @@ def lsh_bands(sig_cols: list[str], bands: int = LSH_BANDS) -> Column:
             )
         ]
 
-    return _memoized_exprs(("lsh_bands", tuple(sig_cols), bands), build)[0]
+    return _memoized(("lsh_bands", tuple(sig_cols), bands), build)[0]
 
 
 def minhash_banded_narrow(
@@ -202,7 +187,7 @@ def minhash_banded_narrow(
 
     sigs = hashed.select(
         F.col(id_col),
-        *_memoized_exprs(
+        *_memoized(
             ("banded_narrow_sigs", k),
             lambda: [
                 F.array_min(F.transform(F.col("_h"), _perm(i))).alias(
@@ -362,7 +347,7 @@ def minhash_candidates(
         return out
 
     mins = sh.groupBy(id_col).agg(
-        *_memoized_exprs(("minhash_mins", k), _build_mins)
+        *_memoized(("minhash_mins", k), _build_mins)
     )
     wsets = docs.select(
         F.col(id_col), F.array_distinct(words(F.col(text_col))).alias("wset")

@@ -1642,7 +1642,7 @@ def random_projection(
     whole-stage-codegen expression; at 100 TB this is the cheap first
     stage of an ANN ladder (project → bucket → refine on the raw
     vectors)."""
-    from anti_ddos_spark.operators.dedup import _memoized_exprs
+    from anti_ddos_spark.features import _memoized
 
     def build() -> list[Column]:
         signs = rp_sign_matrix(k, dim)
@@ -1667,10 +1667,10 @@ def random_projection(
         return [q, *projs]
 
     # k*dim literal Columns ≈ 500+ py4j round-trips per build — memoized
-    # per (params, JVM) like dedup._EXPR_MEMO / features._AGG_MEMO.
+    # per (params, JVM) with features._memoized.
     # id_col is not part of the built Column trees, so it stays out of
     # the memo key (same exprs serve any id column name)
-    cols = _memoized_exprs(("rand_proj", k, dim, quant, vec_col), build)
+    cols = _memoized(("rand_proj", k, dim, quant, vec_col), build)
     q, projs = cols[0], cols[1:]
     return emb.withColumn("_q", q).select(id_col, *projs)
 

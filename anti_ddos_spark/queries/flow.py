@@ -220,7 +220,7 @@ def events_as_packets(ev: DataFrame) -> DataFrame:
     direction, value scales to a packet length (bulk lengths included),
     props.k seeds TCP flags/window. Purely arithmetic → reproducible
     identically in the DuckDB oracle. Column trees are fixed — memoized
-    per JVM like features._AGG_MEMO (r14, guide §7.3: this projection
+    per JVM (features._memoized; r14, guide §7.3: this projection
     cost ~0.35 s of driver py4j per flow-query build)."""
     from anti_ddos_spark.features import _memoized
 
@@ -262,7 +262,7 @@ def events_as_packets(ev: DataFrame) -> DataFrame:
             flag(13).alias("fin_flag"),
         ]
 
-    return ev.select(*_memoized("events_as_packets", "", build))
+    return ev.select(*_memoized(("events_as_packets",), build))
 
 
 def q24_flow_features_full(spark: SparkSession, sf: str) -> DataFrame:

@@ -931,8 +931,8 @@ def q115_streaming_scored_flows(spark: SparkSession, sf: str) -> DataFrame:
     RF model uses, so the scoring plumbing — transform over an
     unbounded DataFrame, prediction → 'DDoS'/'Normal' post-processing,
     finalized-flow filter, append emission — is oracle-covered; the RF
-    itself stays covered by q50 (metrics) and bench_stream (in-stream
-    throughput), where no SQL oracle can exist."""
+    itself stays covered by q50 (metrics) and perfbench's live_accum
+    workload (in-stream, end to end), where no SQL oracle can exist."""
     from anti_ddos_spark.ml import ThresholdRuleModel
     from anti_ddos_spark.streaming.pipeline import scored_flow_stream
 

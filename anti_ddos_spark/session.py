@@ -220,32 +220,9 @@ def get_spark(
         # from $SPARK_HOME's archives (see worker_daemon).
         .config("spark.python.daemon.module", "anti_ddos_spark.worker_daemon")
     )
-    if os.environ.get("SPARK_GRAFT_ROCKSDB", "") not in ("", "0"):
-        for k, v in rocksdb_conf().items():
-            builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Register every parquet table under ``sf_dir`` as a temp view.
-
-    Returns name → DataFrame. Table set matches TESTDATA.md.
-    """
-    import glob as _glob
-
-    out = {}
-    for path in sorted(_glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        name = os.path.splitext(os.path.basename(path))[0]
-        df = spark.read.parquet(path)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
-def table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one testdata table lazily (parquet scan, no view side-effect)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

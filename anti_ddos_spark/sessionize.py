@@ -152,7 +152,7 @@ def prepare_sessions(
     from anti_ddos_spark.features import _memoized
 
     seq = _memoized(
-        "session_col_seq", f"{gap_s!r}|{mode}", lambda: _session_col_seq(gap_s, mode)
+        ("session_col_seq", repr(gap_s), mode), lambda: _session_col_seq(gap_s, mode)
     )
     df = normalize_flow_key(packets)
     # sequential: later columns reference earlier ones by name

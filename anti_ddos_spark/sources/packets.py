@@ -63,9 +63,8 @@ def json_packet_stream(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _synthetic_packet_cols(n_flows: int) -> list:
-    """Deterministic packet columns from a (timestamp, value) relation —
-    shared by the streaming rate source and its batch twin so a soak
-    model can be trained on exactly the traffic shape it will score."""
+    """Deterministic packet columns from the rate source's
+    (timestamp, value) relation."""
     v = F.col("value")
     return [
         F.col("timestamp"),
@@ -107,17 +106,3 @@ def rate_packet_stream(
     )
     return rate.select(*_synthetic_packet_cols(n_flows))
 
-
-def synthetic_packets_batch(
-    spark: SparkSession, n_rows: int, n_flows: int = 1000
-) -> DataFrame:
-    """Batch twin of rate_packet_stream: the same deterministic traffic
-    over a range relation, spread across a synthetic time axis (1000
-    rows/sec), for training a soak-scoring model on matching features."""
-    base = spark.range(n_rows).select(
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("id") * 1000
-        ).alias("timestamp"),
-        F.col("id").alias("value"),
-    )
-    return base.select(*_synthetic_packet_cols(n_flows))

@@ -68,16 +68,6 @@ def foreach_batch_ndjson(
     return w.start()
 
 
-def console_sink(stream_df: DataFrame, **options) -> StreamingQuery:
-    """Append-mode console sink (S6, ml_model/README.md:161-165)."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .format("console")
-        .options(**options)
-        .start()
-    )
-
-
 def kafka_sink(
     stream_df: DataFrame,
     bootstrap_servers: str,

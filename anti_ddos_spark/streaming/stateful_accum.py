@@ -82,10 +82,7 @@ def _acc_names() -> list[str]:
 
 
 ACC_NAMES = _acc_names()
-STATE_SCHEMA = T.StructType(
-    [T.StructField("sp", T.StringType(), True), T.StructField("ss", T.StringType(), True)]
-    + [T.StructField(n, T.DoubleType(), True) for n in ACC_NAMES]
-)
+STATE_SCHEMA = T.StructType([T.StructField(n, T.DoubleType(), True) for n in ACC_NAMES])
 
 _OUT_FIELDS = [f.name for f in FLOW_SCHEMA.fields] + ["is_final"]
 OUTPUT_SCHEMA = T.StructType(
@@ -99,27 +96,23 @@ def pack_state(acc: dict) -> tuple:
     The single source of the state layout — the GroupState path here and
     the transformWithState path (stateful_tws.py) share it; a drifted
     copy would deserialize values shifted into the wrong accumulators.
-    'ss' is a reserved placeholder field kept for schema stability.
     """
-    return (acc["sp"], "", *[float(acc[n]) for n in ACC_NAMES])
+    return tuple(float(acc[n]) for n in ACC_NAMES)
 
 
 def unpack_state(vals: tuple) -> dict:
     """Positional state tuple → acc dict (inverse of pack_state)."""
-    acc = dict(zip(["sp", "ss", *ACC_NAMES], vals))
-    acc.pop("ss", None)
-    return acc
+    return dict(zip(ACC_NAMES, vals))
 
 
-def _new_acc(first_ts: float, src_is_flow_src: bool, key: tuple) -> dict:
+def _new_acc(first_ts: float, src_is_flow_src: bool) -> dict:
     acc = {n: 0.0 for n in ACC_NAMES}
     for p in ("lenf", "lenb", "iatf", "iatb", "fiat", "alen"):
         acc[f"{p}_mn"], acc[f"{p}_mx"] = float("inf"), float("-inf")
     for n in ("last_ts", "last_fwd_ts", "last_bwd_ts", "prev_fwd_len", "prev_bwd_len"):
         acc[n] = float("nan")
     acc["first_ts"] = first_ts
-    # the first packet's "ip:port"; its orientation alone decides direction
-    acc["sp"] = f"{key[0]}:{int(key[1])}" if src_is_flow_src else f"{key[2]}:{int(key[3])}"
+    # the first packet's orientation alone decides direction
     acc["src_is_flow_src"] = float(src_is_flow_src)
     return acc
 
@@ -145,7 +138,7 @@ def update_accumulators(acc: dict | None, pdf: "pd.DataFrame", key: tuple) -> di
     ts, from_a = ts[order], from_a[order]
     ln = pdf["length"].to_numpy("int64")[order]
     if acc is None:
-        acc = _new_acc(float(ts[0]), bool(from_a[0]), key)
+        acc = _new_acc(float(ts[0]), bool(from_a[0]))
     is_fwd = from_a == (acc["src_is_flow_src"] >= 0.5)
 
     def series(prefix: str, v):

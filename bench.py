@@ -15,6 +15,8 @@ BENCH_SCALE10X.json. The DEFAULT run then embeds that file (marked
 ``"cached": true`` with its build timestamp) as a ``scale10x`` block in
 the one-line JSON, so the per-round BENCH artifact carries both scales
 without the driver's bench run paying the multi-minute replication cost.
+``--sf 100x`` does the same for documents+embeddings at 100x
+(BENCH_SCALE100X.json, block ``scale100x``).
 """
 
 from __future__ import annotations
@@ -31,30 +33,41 @@ sys.path.insert(0, REPO)
 SCALE10X_RESULT = os.path.join(REPO, "BENCH_SCALE10X.json")
 SCALE100X_RESULT = os.path.join(REPO, "BENCH_SCALE100X.json")
 
-# 100x decade block (round-6 verdict task #7): adaptive-parameter /
-# scale-safe paths only — the fixed-demo forms (q42 et al.) were already
-# adjudicated as deliberate saturation exhibits at 10x, and the events
-# table at 100x is 100M rows of fixture replication that the q24/q20
-# decade story already covers. documents+embeddings replicate cheaply.
-SCALE100X_QUERIES = [
-    "q35_minhash_prod",
-    "q103_curriculum_order",
-    "q104_epoch_shuffle",
-]
+# the decade dirs replicate these sf0.1 tables (scripts/scale_probe.py)
+DECADE_TABLES = ("events", "documents", "embeddings")
 
-# headline queries whose inputs (events/documents/embeddings) exist in
-# the replicated decade dir; the TPC-H-table queries have no 10x twin.
+# `--sf` → run_decade arguments.
+# 10x: headline queries whose inputs (events/documents/embeddings) exist
+# in the replicated decade dir; the TPC-H-table queries have no 10x twin.
 # q42 is the ORACLE-PINNED fixed-parameter demo (static bucket space, so
 # its decade number grows superlinearly by design — PERF.md "parameter
 # saturation"); the neardup_adaptive_params probe timed next to it is
 # the production scale path (lsh_planes_for occupancy-constant sizing).
-SCALE10X_QUERIES = [
-    "q20_event_sessions",
-    "q24_flow_features_full",
-    "q35_minhash_prod",
-    "q37_curation_funnel",
-    "q42_cosine_neardup_pairs",
-]
+# 100x (round-6 verdict task #7): adaptive-parameter / scale-safe paths
+# only — the fixed-demo forms (q42 et al.) were already adjudicated as
+# deliberate saturation exhibits at 10x, and the events table at 100x is
+# 100M rows of fixture replication that the q24/q20 decade story already
+# covers. documents+embeddings replicate cheaply.
+DECADES = {
+    "10x": (
+        10,
+        [
+            "q20_event_sessions",
+            "q24_flow_features_full",
+            "q35_minhash_prod",
+            "q37_curation_funnel",
+            "q42_cosine_neardup_pairs",
+        ],
+        DECADE_TABLES,
+        SCALE10X_RESULT,
+    ),
+    "100x": (
+        100,
+        ["q35_minhash_prod", "q103_curriculum_order", "q104_epoch_shuffle"],
+        ("documents", "embeddings"),
+        SCALE100X_RESULT,
+    ),
+}
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -79,13 +92,14 @@ HEADLINE = [
 
 
 def _host_probe_factory(sf_dir: str = "/root/testdata/sf0.1"):
-    """Cheap same-box host-speed probe for the decade blocks (r13
-    verdict task #1: the 10x/100x walls carried no anchor, so weather
-    claims about their run-to-run movement were unfalsifiable). One
-    DuckDB connection, warmed once, running q24's oracle at the fixed
-    headline sf — ~2 s of real aggregation CPU per run, min-of-2 per
-    sample. Returns a zero-arg sampler (None on any failure: the probe
-    must never fail a bench)."""
+    """Cheap same-box host-speed probe (r13 verdict task #1: the 10x/100x
+    walls carried no anchor, so weather claims about their run-to-run
+    movement were unfalsifiable). One DuckDB connection, warmed once,
+    running q24's oracle at ``sf_dir`` — real aggregation CPU, min-of-2
+    per sample. (The lighter relational oracles run in ~10-20 ms at the
+    oracle sf — timer-noise territory, useless as a load signal.)
+    Returns a zero-arg sampler (None on any failure: the probe must
+    never fail a bench)."""
     try:
         import duckdb
 
@@ -120,13 +134,45 @@ def _host_probe_factory(sf_dir: str = "/root/testdata/sf0.1"):
     return sample
 
 
-def _timed_decade_probes(spark, probes, out_dir: str, runs: int) -> tuple[dict, dict]:
-    """Time each probe with the byte axis, sampling the host probe
-    before, between and after — the anchor track that makes decade
-    walls comparable across sessions (r13 verdict task #1)."""
+def run_decade(
+    replicas: int, queries: list[str], tables: tuple[str, ...], result_path: str
+) -> None:
+    """Build (or reuse) a ``replicas``-fold replication of ``tables`` from
+    sf0.1, time ``queries`` plus the adaptive near-dup probe there with
+    the byte axis, and persist the block for default runs to embed. The
+    host probe is sampled before, between and after the queries — the
+    anchor track that makes decade walls comparable across sessions."""
     sys.path.insert(0, os.path.join(REPO, "scripts"))
     import scale_probe
 
+    from anti_ddos_spark.queries import full_registry
+    from anti_ddos_spark.session import get_spark
+
+    out_dir = os.environ.get(
+        f"SPARK_GRAFT_{replicas}X_DIR", f"/tmp/spark_graft_{replicas}x"
+    )
+    # UI on: the decade blocks carry an engine-invariant BYTES axis
+    # (input read + shuffle written per query, via the status REST API)
+    # next to the cache-state-sensitive wall clock — r8 verdict task #5.
+    spark = get_spark(
+        app_name=f"anti_ddos_spark_bench_{replicas}x",
+        extra_conf={"spark.ui.enabled": "true",
+                    "spark.ui.retainedStages": "20000",
+                    # r9 ADVICE: the SQL REST endpoint (sql_scan_bytes'
+                    # bytes axis) retains only 1000 executions by
+                    # default — a long decade session can evict the
+                    # measured run's executions and silently report 0
+                    "spark.sql.ui.retainedExecutions": "20000"},
+    )
+    if not all(
+        os.path.exists(os.path.join(out_dir, f"{t}.parquet", "_SUCCESS"))
+        for t in tables
+    ):
+        scale_probe.build_10x(spark, out_dir, replicas, tables)
+    reg = full_registry()
+    probes = [(n, reg[n].fn) for n in queries] + [
+        ("neardup_adaptive_params", scale_probe.neardup_adaptive_params)
+    ]
     probe = _host_probe_factory()
     track: list[list] = []
     t0 = time.perf_counter()
@@ -139,56 +185,16 @@ def _timed_decade_probes(spark, probes, out_dir: str, runs: int) -> tuple[dict, 
     _sample()
     detail = {}
     for name, fn in probes:
-        detail[name] = scale_probe.time_query_with_bytes(spark, fn, out_dir, runs)
+        # min-of-2 after warm: the spill-bound q42 decade point varies
+        # ~1.5x run-to-run on a shared-disk box; min is the steady-state
+        # claim
+        detail[name] = scale_probe.time_query_with_bytes(spark, fn, out_dir, 2)
         _sample()
     vals = sorted(v for _t, v in track)
-    anchor = {
-        "probe": "duckdb q24_flow_features_full oracle @ sf0.1, min-of-2",
-        "track": track,
-        "median_sec": vals[len(vals) // 2] if vals else None,
-    }
-    return detail, anchor
-
-
-def run_scale10x() -> None:
-    """Build (or reuse) the 10x decade dir and time the compatible
-    headline subset there; persist the block for default runs to embed."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    import scale_probe
-
-    from anti_ddos_spark.queries import full_registry
-    from anti_ddos_spark.session import get_spark
-
-    out_dir = os.environ.get("SPARK_GRAFT_10X_DIR", "/tmp/spark_graft_10x")
-    # UI on: the decade blocks carry an engine-invariant BYTES axis
-    # (input read + shuffle written per query, via the status REST API)
-    # next to the cache-state-sensitive wall clock — r8 verdict task #5.
-    spark = get_spark(
-        app_name="anti_ddos_spark_bench_10x",
-        extra_conf={"spark.ui.enabled": "true",
-                    "spark.ui.retainedStages": "20000",
-                    # r9 ADVICE: the SQL REST endpoint (sql_scan_bytes'
-                    # bytes axis) retains only 1000 executions by
-                    # default — a long decade session can evict the
-                    # measured run's executions and silently report 0
-                    "spark.sql.ui.retainedExecutions": "20000"},
-    )
-    done = all(
-        os.path.exists(os.path.join(out_dir, f"{t}.parquet", "_SUCCESS"))
-        for t in ("events", "documents", "embeddings")
-    )
-    if not done:
-        scale_probe.build_10x(spark, out_dir, replicas=10)
-    reg = full_registry()
-    probes = [(n, reg[n].fn) for n in SCALE10X_QUERIES] + [
-        ("neardup_adaptive_params", scale_probe.EXTRA_PROBES["neardup_adaptive_params"])
-    ]
-    # min-of-2 after warm: the spill-bound q42 decade point varies ~1.5x
-    # run-to-run on a shared-disk box; min is the steady-state claim
-    detail, host_anchor = _timed_decade_probes(spark, probes, out_dir, 2)
     timings = {name: d["sec"] for name, d in detail.items()}
+    subset = "" if set(tables) == set(DECADE_TABLES) else ", " + "+".join(tables)
     block = {
-        "sf": "1.0 (10x replication of sf0.1)",
+        "sf": f"{replicas / 10:.1f} ({replicas}x replication of sf0.1{subset})",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
@@ -196,85 +202,19 @@ def run_scale10x() -> None:
             name: {k: v for k, v in d.items() if k != "sec"}
             for name, d in detail.items()
         },
-        "host_anchor": host_anchor,
-        "built_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-    }
-    with open(SCALE10X_RESULT, "w") as f:
-        json.dump(block, f, indent=1)
-    print(json.dumps(block))
-
-
-def run_scale100x() -> None:
-    """Build (or reuse) the 100x documents/embeddings decade dir and time
-    the adaptive-path subset there; persist for default runs to embed."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    import scale_probe
-
-    from anti_ddos_spark.queries import full_registry
-    from anti_ddos_spark.session import get_spark
-
-    out_dir = os.environ.get("SPARK_GRAFT_100X_DIR", "/tmp/spark_graft_100x")
-    spark = get_spark(
-        app_name="anti_ddos_spark_bench_100x",
-        extra_conf={"spark.ui.enabled": "true",
-                    "spark.ui.retainedStages": "20000",
-                    # r9 ADVICE: the SQL REST endpoint (sql_scan_bytes'
-                    # bytes axis) retains only 1000 executions by
-                    # default — a long decade session can evict the
-                    # measured run's executions and silently report 0
-                    "spark.sql.ui.retainedExecutions": "20000"},
-    )
-    tables = {"documents", "embeddings"}
-    done = all(
-        os.path.exists(os.path.join(out_dir, f"{t}.parquet", "_SUCCESS"))
-        for t in tables
-    )
-    if not done:
-        scale_probe.build_10x(spark, out_dir, replicas=100, tables=tables)
-    reg = full_registry()
-    probes = [(n, reg[n].fn) for n in SCALE100X_QUERIES] + [
-        ("neardup_adaptive_params", scale_probe.EXTRA_PROBES["neardup_adaptive_params"])
-    ]
-    detail, host_anchor = _timed_decade_probes(spark, probes, out_dir, 2)
-    timings = {name: d["sec"] for name, d in detail.items()}
-    block = {
-        "sf": "10.0 (100x replication of sf0.1, documents+embeddings)",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "bytes": {
-            name: {k: v for k, v in d.items() if k != "sec"}
-            for name, d in detail.items()
+        "host_anchor": {
+            "probe": "duckdb q24_flow_features_full oracle @ sf0.1, min-of-2",
+            "track": track,
+            "median_sec": vals[len(vals) // 2] if vals else None,
         },
-        "host_anchor": host_anchor,
+        # a cached block from a machine with another core count is not
+        # a regression of this one
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()),
         "built_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    with open(SCALE100X_RESULT, "w") as f:
+    with open(result_path, "w") as f:
         json.dump(block, f, indent=1)
     print(json.dumps(block))
-
-
-# Every row that runs a REAL streaming query (exactly one
-# query.start() each — verified by grep over streamops.py). At the
-# oracle sf their wall clock is dominated by query start/stop +
-# availableNow rounds, which scatters 7.9-18 s on identical code (r9
-# adjudication) — so the sweep also records the MARGINAL time (cold
-# minus a same-session empty-stream floor), which is the engine-work
-# column the round-over-round diff should regress on (r9 verdict task
-# #4).
-STREAMING_QUERIES = {
-    "q70_streaming_sessionize", "q71_stateful_accum",
-    "q72_tws_sessionize", "q73_streaming_dedup",
-    "q74_streaming_minhash_buckets", "q75_streaming_embedding_buckets",
-    "q76_streaming_decontaminate", "q78_streaming_pii",
-    "q83_streaming_drift", "q88_streaming_rate_anomaly",
-    "q92_hopping_rates", "q93_stream_stream_join",
-    "q114_bounded_dedup_replay", "q115_streaming_scored_flows",
-    "q118_stream_stream_left_join", "q128_streaming_distinct_users",
-    "q129_stream_stream_full_join", "q139_streaming_bpe_tokens",
-    "q140_streaming_cdf", "q143_ivm_maintained_aggregate",
-    "q146_mor_streaming_cdf",
-}
 
 
 def _stream_startup_floor(spark, runs: int = 3) -> float:
@@ -373,50 +313,28 @@ def run_all(out_path: str) -> None:
     floor = _stream_startup_floor(spark)
     reg = full_registry()
 
-    # light host-speed probe (r11 verdict task #2): ONE representative
-    # DuckDB oracle, min-of-2 — cheap enough (<1 s) to sample inside
-    # the sweep, giving a time-LOCAL anchor track where the two full
-    # anchors only bracket it. Streaming marginals normalize against
+    # Every row that runs a REAL streaming query. At the oracle sf their
+    # wall clock is dominated by query start/stop + availableNow rounds,
+    # which scatters 7.9-18 s on identical code (r9 adjudication) — so
+    # the sweep also records the MARGINAL time (cold minus a same-session
+    # empty-stream floor), the engine-work column the round-over-round
+    # diff should regress on (r9 verdict task #4).
+    from anti_ddos_spark.queries import streamops
+
+    streaming = set(streamops.QUERIES) | set(streamops.EXTRA_QUERIES)
+
+    # light host-speed probe (r11 verdict task #2), cheap enough to
+    # sample inside the sweep: a time-LOCAL anchor track where the two
+    # full anchors only bracket it. Streaming marginals normalize against
     # the track value interpolated at their own measurement time.
-    # q24's oracle (~0.3-0.7 s of real aggregation CPU) is the probe:
-    # the lighter relational oracles run in ~10-20 ms at the oracle sf
-    # — timer-noise territory, useless as a load signal.
     sweep_t0 = _time.perf_counter()
-    _mini_sql = reg["q24_flow_features_full"].sql
-
-    def _mini_anchor() -> float | None:
-        try:
-            import duckdb
-
-            con = duckdb.connect()
-            for n in (
-                "region nation customer supplier part orders lineitem "
-                "events documents embeddings"
-            ).split():
-                con.execute(
-                    f"CREATE VIEW {n} AS SELECT * FROM "
-                    f"read_parquet('{sf_dir}/{n}.parquet')"
-                )
-            con.execute(_mini_sql).fetchall()  # warm
-            best = None
-            for _ in range(2):
-                t0 = _time.perf_counter()
-                con.execute(_mini_sql).fetchall()
-                dt = _time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            con.close()
-            return best
-        except Exception:
-            return None
-
+    probe = _host_probe_factory(sf_dir)
     anchor_track: list[list[float]] = []
 
     def _track_sample() -> None:
-        v = _mini_anchor()
+        v = probe()
         if v:
-            anchor_track.append(
-                [round(_time.perf_counter() - sweep_t0, 1), round(v, 4)]
-            )
+            anchor_track.append([round(_time.perf_counter() - sweep_t0, 1), v])
 
     def _track_interp(t: float) -> float | None:
         if not anchor_track:
@@ -490,7 +408,7 @@ def run_all(out_path: str) -> None:
         t1 = once(name)
         timings[name] = round(t1, 3)
         batch_at[name] = _time.perf_counter() - sweep_t0
-        if name in STREAMING_QUERIES:
+        if name in streaming:
             # startup spikes (checkpoint fsync, GC, query lifecycle)
             # are one-sided noise that rarely hits both runs; the diff
             # regresses on best-of-2 minus the measured startup floor
@@ -507,7 +425,7 @@ def run_all(out_path: str) -> None:
     # auto-rerun the largest batch walls standalone: a GC pause or page
     # cache miss lands on ONE run; min-of-2 on the heaviest rows removes
     # the spikes that dominated past rounds' manual adjudication
-    batch_names = [n for n in timings if n not in STREAMING_QUERIES]
+    batch_names = [n for n in timings if n not in streaming]
     batch_best2: dict[str, float] = {}
     for name in sorted(batch_names, key=lambda n: -timings[n])[:8]:
         t2 = once(name)
@@ -809,11 +727,8 @@ def main() -> None:
     if args.all:
         run_all(args.out)
         return
-    if args.sf == "10x":
-        run_scale10x()
-        return
-    if args.sf == "100x":
-        run_scale100x()
+    if args.sf in DECADES:
+        run_decade(*DECADES[args.sf])
         return
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

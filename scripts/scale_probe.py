@@ -1,88 +1,53 @@
-"""sf1-equivalent headroom probe: measure how the flagship plans scale.
+"""Scale fixtures and the byte-axis timer behind ``bench.py --sf 10x/100x``.
 
-Builds a 10x replication of the sf0.1 `events` / `documents` /
-`embeddings` tables (≈ sf1: 1M events, 50k docs, 20k vectors) and times
-the five most expensive headline queries at sf0.01 / sf0.1 / 10x,
-reporting the per-decade scaling exponent alpha where
-t(10n) ≈ 10^alpha · t(n). alpha ≈ 1 is linear; the shuffle-bounded
-claims in PERF.md predict alpha ≤ ~1.1 for every flagship plan.
+- ``build_10x``: an id-remapped replication of the sf0.1 ``events`` /
+  ``documents`` / ``embeddings`` tables (10x ≈ sf1). Replication keeps
+  the SEMANTICS linear too, not just the row count — naive duplication
+  would make every row an exact dup and push the near-dup joins
+  quadratic:
 
-Replication is designed so the SEMANTICS scale linearly too, not just
-the row count — naive duplication would make every row an exact dup and
-push the near-dup joins quadratic, proving nothing:
+  - events: user_id (the flow key in events_as_packets) and event_id are
+    offset per replica → 10x distinct flows of unchanged length; the
+    time span is unchanged, so session windows per user keep their shape.
+  - documents: doc_id offset; every word gets a fixed-width per-replica
+    tag, so within-replica shingle relationships are preserved while
+    cross-replica pairs don't become spurious near-dups.
+  - embeddings: vec_id offset; each replica's vectors are multiplied by
+    a deterministic per-replica ±1 sign pattern — a diagonal orthogonal
+    transform, so within-replica angles (and thus the true near-dup pair
+    set) are preserved EXACTLY, while cross-replica cosines are
+    sign-randomized to ~0. Near-dup output therefore scales exactly 10x.
 
-- events: user_id (the flow key in events_as_packets) and event_id are
-  offset per replica → 10x distinct flows of unchanged length; the time
-  span is unchanged, so session windows per user keep their shape.
-- documents: doc_id offset; text gets a per-replica `r{k} ` prefix, so
-  within-replica shingle relationships are preserved while cross-replica
-  pairs don't become spurious near-dups.
-- embeddings: vec_id offset; each replica's vectors are multiplied by a
-  deterministic per-replica ±1 sign pattern — a diagonal orthogonal
-  transform, so within-replica angles (and thus the true near-dup pair
-  set) are preserved EXACTLY, while cross-replica cosines are
-  sign-randomized to ~0. Near-dup output therefore scales exactly 10x.
+- ``build_zipf_documents``: a generated Zipf/Heaps corpus (recall and
+  BPE ladders, tests/test_zipf_fixture.py).
+- ``build_graded_embeddings``: pairs planted at exact target cosines
+  (scripts/embed_scurve.py, tests/test_embed_recall.py).
+- ``time_query_with_bytes``: min-of-runs wall clock plus scan and
+  shuffle bytes from the Spark status REST API.
+- ``neardup_adaptive_params``: the scale-adaptive near-dup probe the
+  decade blocks time beside q42.
 
-Usage: python scripts/scale_probe.py [--scales 10] [--runs 2]
-       [--queries q34_ngram_jaccard,neardup_prod_params]
-       [--tables documents,embeddings]
-
---scales takes a comma list of replica factors (e.g. ``10,100``): one
-replicated dir is built per factor and each probe is timed at every
-scale, with a per-adjacent-decade alpha between consecutive scales —
-the round-5 form of the probe, which extends the two r4 watch rows
-(q34, production-banded near-dup) a further decade. --tables limits
-which tables are replicated (the 100x events table is 100M rows and
-irrelevant to the document/embedding watch rows).
-
-Writes one JSON line per (query, scale) and a summary with exponents.
+What the decade measurements found is in PERF.md ("sf1 headroom", the
+100x decade and the round-7 tables).
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF001 = "/root/testdata/sf0.01"
 SF01 = "/root/testdata/sf0.1"
 
-PROBE_QUERIES = [
-    "q24_flow_features_full",
-    "q20_event_sessions",
-    "q35_minhash_prod",
-    "q34_ngram_jaccard",
-    "q42_cosine_neardup_pairs",
-    "q37_curation_funnel",
-]
 
-
-def _neardup_prod(spark, sf_dir):
-    """q42's operator at PRODUCTION banding (4 bands x 8 Gaussian planes
-    → 256 buckets/band). q42 itself is pinned to the oracle's demo
-    banding (2x4 → 16 buckets/band), which is deliberately permissive
-    and goes near-quadratic once the corpus outgrows the bucket count —
-    the same demo-vs-production split bench.py notes for q32/q35. This
-    is the shape a production corpus would run."""
-    from anti_ddos_spark.operators.similarity import lsh_neardup_pairs
-    from anti_ddos_spark.queries.base import t
-
-    return lsh_neardup_pairs(
-        t(spark, sf_dir, "embeddings"), 0.8, n_bands=4, planes_per_band=8
-    )
-
-
-def _neardup_adaptive(spark, sf_dir):
+def neardup_adaptive_params(spark, sf_dir):
     """The near-dup operator under the SCALE-ADAPTIVE parameter policy
     (config.lsh_planes_for): bucket space sized to the corpus so
-    occupancy stays ~constant. The fixed-parameter twin above saturates
-    at the 100x decade (measured: disk-spill death); this row is the
+    occupancy stays ~constant. q42's fixed demo banding saturates at the
+    100x decade (measured: disk-spill death, PERF.md); this row is the
     posture a growing corpus actually runs."""
     from anti_ddos_spark.config import lsh_planes_for
     from anti_ddos_spark.operators.similarity import lsh_neardup_pairs
@@ -93,128 +58,19 @@ def _neardup_adaptive(spark, sf_dir):
     return lsh_neardup_pairs(emb, 0.8, n_bands=4, planes_per_band=planes)
 
 
-def _jaccard_w5(spark, sf_dir):
-    """Round-6 task #7: the LARGER-token-space fix for q34's saturated
-    corpus — 5-gram Jaccard via the same recall-1 prefix-filtered join
-    (w=5 multiplies the token space, pushing the n²/V candidate floor
-    out without the df-cap's recall trade; parity/recall-1 unit:
-    tests/test_jaccard_cap.py::test_wider_ngram_is_exact_vs_bruteforce)."""
-    from anti_ddos_spark.queries.base import t
-    from anti_ddos_spark.queries.textops import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(t(spark, sf_dir, "documents"), ngram_w=5)
-
-
-def _jaccard_capped(spark, sf_dir):
-    """q34's operator under the DF-CAPPED posture at w=3: n-grams whose
-    document frequency exceeds an absolute cap are dropped as join keys.
-    This probe measures the COST curve only — round 7's recall
-    measurement (scripts/zipf_recall.py) showed the w=3 capped form's
-    recall collapses past ~100k docs (char-trigram space is bounded at
-    |alphabet|³, so no trigram stays rare); the recall-keeping capped
-    form is `jaccard_capped_w5` below. The cap
-    is absolute, not corpus-relative: the whole point is that candidate
-    volume per join key stays ≤ cap² no matter how large the corpus
-    grows, which is what the exact recall-1 form cannot promise (its
-    n²/V floor is a counting fact — measured to a >79 GB spill death at
-    5M Zipf docs; PERF.md round-7). The cap value is a knob
-    (SPARK_GRAFT_JACCARD_CAP, default 200): total candidate volume is
-    ~O(cap · total-tokens-under-cap), i.e. linear in corpus size for a
-    fixed cap, but the CONSTANT is the cap — 2000 was measured to spill
-    this box's disk at the 5M-doc Zipf decade while 200 completes."""
-    from anti_ddos_spark.queries.base import t
-    from anti_ddos_spark.queries.textops import ngram_jaccard_pairs
-
-    cap = int(os.environ.get("SPARK_GRAFT_JACCARD_CAP", "200"))
-    return ngram_jaccard_pairs(
-        t(spark, sf_dir, "documents"), max_prefix_df=cap
-    )
-
-
-def _jaccard_capped_w5(spark, sf_dir):
-    """The capped posture at w=5 — the form that KEEPS recall on large
-    corpora. Round-7 measurement: at 500k Zipf docs the w=3 capped form
-    has recall ~0 (char-trigram space is bounded at |alphabet|^3, so no
-    trigram is rare and the cap empties the prefix), while w=5 grows the
-    gram space ~27^5 so rare grams exist for the rare-first prefix to
-    keep. Cap from SPARK_GRAFT_JACCARD_CAP (default 200), as above.
-    Measured cost (PERF.md round-7): 28.7 s at 50k Zipf docs, 464 s at
-    500k (alpha 1.21 — superlinear, because the growing V5 keeps more
-    grams under the cap as the corpus grows), box-disk-bounded at 5M;
-    recall 0.999 at 500k. Keeping recall with the cap is not free —
-    MinHash (q35) stays the corpus-scale production path."""
-    from anti_ddos_spark.queries.base import t
-    from anti_ddos_spark.queries.textops import ngram_jaccard_pairs
-
-    cap = int(os.environ.get("SPARK_GRAFT_JACCARD_CAP", "200"))
-    return ngram_jaccard_pairs(
-        t(spark, sf_dir, "documents"), max_prefix_df=cap, ngram_w=5
-    )
-
-
-# Fixed merge list for the BPE apply probes: the 12 merges bpe_learn
-# finds on the zipf 1x fixture (deterministic — argmax ties break
-# lexically), hardcoded so the probe times APPLY alone, not learning
-# (learning's decade curve is measured separately and is flat, PERF.md
-# round-7).
-_BPE_PROBE_MERGES = [
-    ("a", "a"), ("aa", "a"), ("a", "b"), ("aaa", "b"), ("aa", "b"),
-    ("a", "c"), ("aaa", "c"), ("aa", "c"), ("a", "d"), ("aaa", "d"),
-    ("aa", "d"), ("a", "e"),
-]
-
-
-def _bpe_apply_fold(spark, sf_dir):
-    """BPE tokenization, zero-shuffle fold form: k folds per word
-    OCCURRENCE — measured exactly linear (corpus-bounded compute)."""
+def build_10x(spark, out_dir: str, replicas: int, tables: tuple[str, ...]) -> None:
+    """Write ``replicas`` id-remapped copies of each of ``tables`` from
+    sf0.1 to ``out_dir``."""
     from pyspark.sql import functions as F
 
-    from anti_ddos_spark.operators.bpe import tokens_expr
-    from anti_ddos_spark.queries.base import t
-
-    return t(spark, sf_dir, "documents").select(
-        F.size(tokens_expr(F.col("text"), _BPE_PROBE_MERGES)).alias("n")
-    )
-
-
-def _bpe_apply_vocab(spark, sf_dir):
-    """BPE tokenization, V-bounded vocab-join form: k folds per DISTINCT
-    word, mapping broadcast back — the 100 TB path (PERF.md decades:
-    2.15/7.54/62.7 s vs the fold form's 13.4/135.7/~1350 s)."""
-    from anti_ddos_spark.operators.bpe import bpe_tokenize_via_vocab
-    from anti_ddos_spark.queries.base import t
-
-    return bpe_tokenize_via_vocab(
-        t(spark, sf_dir, "documents").select("doc_id", "text"),
-        _BPE_PROBE_MERGES,
-    )
-
-
-EXTRA_PROBES = {
-    "jaccard_w5": _jaccard_w5,
-    "jaccard_capped": _jaccard_capped,
-    "jaccard_capped_w5": _jaccard_capped_w5,
-    "neardup_prod_params": _neardup_prod,
-    "neardup_adaptive_params": _neardup_adaptive,
-    "bpe_apply_fold": _bpe_apply_fold,
-    "bpe_apply_vocab": _bpe_apply_vocab,
-}
-
-
-def build_10x(
-    spark, out_dir: str, replicas: int, tables: set[str] | None = None
-) -> None:
-    from pyspark.sql import functions as F
-
-    tables = tables or {"events", "documents", "embeddings"}
     rep = F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))).alias("replica")
-
-    if "events" in tables:
-        _build_events(spark, out_dir, rep)
-    if "documents" in tables:
-        _build_documents(spark, out_dir, rep)
-    if "embeddings" in tables:
-        _build_embeddings(spark, out_dir, rep)
+    builders = {
+        "events": _build_events,
+        "documents": _build_documents,
+        "embeddings": _build_embeddings,
+    }
+    for name in tables:
+        builders[name](spark, out_dir, rep)
 
 
 def _build_events(spark, out_dir: str, rep) -> None:
@@ -540,19 +396,6 @@ def build_graded_embeddings(
     shutil.rmtree(raw_path, ignore_errors=True)
 
 
-def time_query(spark, fn, sf_dir: str, runs: int) -> float:
-    from pyspark.sql import functions as F
-
-    def once() -> float:
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.agg(F.count(F.lit(1)), F.max(F.xxhash64(*df.columns))).collect()
-        return time.perf_counter() - t0
-
-    once()  # warm: codegen + AQE plan at this size
-    return min(once() for _ in range(runs))
-
-
 # --- engine-invariant byte metrics (round 9, r8 verdict task #5) -----------
 #
 # The decade blocks' wall clock is page-cache-state bound at 100x (the
@@ -560,7 +403,7 @@ def time_query(spark, fn, sf_dir: str, runs: int) -> float:
 # blocks also record bytes READ and shuffle bytes WRITTEN per query —
 # deterministic functions of the plan and data, immune to cache state —
 # via the Spark status REST API (the session must be built with
-# spark.ui.enabled=true; bench.py's decade runners do).
+# spark.ui.enabled=true; bench.py's decade runner does).
 
 
 def _rest(spark, path: str):
@@ -642,9 +485,9 @@ def sql_scan_bytes(spark, after_id: int) -> int:
 
 
 def time_query_with_bytes(spark, fn, sf_dir: str, runs: int) -> dict:
-    """``time_query`` + the byte axis: min-of-runs seconds (steady-state
-    wall clock) and the LAST run's byte deltas (bytes are plan-determined
-    and run-invariant, so any run's delta is the number)."""
+    """Min-of-runs seconds after one warm run (steady-state wall clock)
+    and the LAST run's byte deltas (bytes are plan-determined and
+    run-invariant, so any run's delta is the number)."""
     from pyspark.sql import functions as F
 
     def once() -> float:
@@ -668,125 +511,3 @@ def time_query_with_bytes(spark, fn, sf_dir: str, runs: int) -> dict:
             )
     return rec
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument(
-        "--scales",
-        default="10",
-        help="comma list of replica factors to build and probe (e.g. 10,100)",
-    )
-    ap.add_argument("--runs", type=int, default=2)
-    ap.add_argument(
-        "--queries",
-        default=None,
-        help="comma subset of probes (default: all flagship probes)",
-    )
-    ap.add_argument(
-        "--tables",
-        default=None,
-        help="comma subset of tables to replicate (default: all three)",
-    )
-    ap.add_argument("--keep", action="store_true", help="keep the scale dirs")
-    ap.add_argument(
-        "--fixture",
-        default="replica",
-        choices=("replica", "zipf"),
-        help="replica: id-remapped replication of sf0.1 (default). "
-        "zipf: generated Heaps/Zipf corpus (documents only); --scales "
-        "are then multiples of 50k docs (0.1,1,10,100)",
-    )
-    args = ap.parse_args()
-    scales = [float(s) if "." in s else int(s) for s in args.scales.split(",")]
-
-    from anti_ddos_spark.queries import full_registry
-    from anti_ddos_spark.session import get_spark
-
-    spark = get_spark(app_name="scale_probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    reg = full_registry()
-
-    if args.fixture == "zipf":
-        # zipf dirs carry only documents; default to the token-space
-        # probes whose saturation story the corpus exists to re-test.
-        # The exact recall-1 forms (q34, jaccard_w5) are NOT defaults at
-        # 100x: their n²/V candidate floor spills the disk at 5M Zipf
-        # docs (measured) — probe them explicitly with --queries at the
-        # scales you can afford.
-        probes = [
-            ("q35_minhash_prod", reg["q35_minhash_prod"].fn),
-            ("jaccard_capped", EXTRA_PROBES["jaccard_capped"]),
-        ]
-    else:
-        probes = [(n, reg[n].fn) for n in PROBE_QUERIES] + list(EXTRA_PROBES.items())
-    if args.queries:
-        wanted = set(args.queries.split(","))
-        # any extra probe or full_registry query can be requested by
-        # name, not only the mode's default set (zipf mode defaults
-        # exclude the exact recall-1 forms, but probing them at chosen
-        # scales is exactly what --queries is for)
-        pool = dict(probes)
-        pool.update(EXTRA_PROBES)
-        unknown = wanted - set(pool) - set(reg)
-        if unknown:
-            # fail BEFORE the expensive replica build: a typo'd name
-            # would otherwise probe nothing and exit 0
-            raise SystemExit(f"unknown probe/query names: {sorted(unknown)}")
-        probes = [(n, pool[n]) for n in sorted(wanted & set(pool))] + [
-            (n, reg[n].fn) for n in sorted(wanted - set(pool))
-        ]
-
-    tables = set(args.tables.split(",")) if args.tables else None
-    scale_dirs: list[tuple[float, str]] = []
-    for rep in scales:
-        if args.fixture == "zipf":
-            out_dir = os.path.join(tempfile.gettempdir(), f"zipf_{rep}x")
-            if not os.path.exists(
-                os.path.join(out_dir, "documents.parquet", "_SUCCESS")
-            ):
-                build_zipf_documents(spark, out_dir, int(rep * ZIPF_BASE_DOCS))
-        else:
-            out_dir = os.path.join(tempfile.gettempdir(), f"scale_{rep}x")
-            build_10x(spark, out_dir, int(rep), tables)
-        scale_dirs.append((rep, out_dir))
-    import math
-
-    results: dict[str, dict[str, float]] = {}
-    for name, fn in probes:
-        # (label, replica factor relative to sf0.1, seconds)
-        # zipf mode has no sf0.01/sf0.1 anchors: corpus statistics must
-        # be consistent along the whole curve, so every point is generated
-        suffix = "zipf" if args.fixture == "zipf" else "sf0.1"
-        specs = (
-            []
-            if args.fixture == "zipf"
-            else [("sf0.01", 0.1, SF001), ("sf0.1", 1.0, SF01)]
-        ) + [(f"{rep}x_{suffix}", float(rep), d) for rep, d in scale_dirs]
-        # time + print each point AS IT COMPLETES: a late-scale abort
-        # (disk spill at 100x is a real outcome this probe exists to
-        # find) must not lose the earlier decades' measurements
-        points = []
-        for lbl, factor, d in specs:
-            secs = time_query(spark, fn, d, args.runs)
-            print(
-                json.dumps({"query": name, "point": lbl, "sec": round(secs, 3)}),
-                flush=True,
-            )
-            points.append((lbl, factor, secs))
-        r = {lbl: secs for lbl, _f, secs in points}
-        # per-adjacent-interval exponent, normalized per decade
-        for (l0, f0, t0), (l1, f1, t1) in zip(points, points[1:]):
-            r[f"alpha({l0}->{l1})"] = round(
-                math.log(t1 / t0) / math.log(f1 / f0), 3
-            )
-        results[name] = {k: round(v, 3) for k, v in r.items()}
-        print(json.dumps({"query": name, **results[name]}), flush=True)
-
-    print(json.dumps({"summary": results}))
-    if not args.keep:
-        for _rep, d in scale_dirs:
-            shutil.rmtree(d, ignore_errors=True)
-
-
-if __name__ == "__main__":
-    main()

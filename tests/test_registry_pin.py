@@ -243,22 +243,6 @@ def test_every_driver_row_has_an_oracle():
     assert all(q.sql is not None for q in registry().values())
 
 
-def test_bench_streaming_set_matches_registry():
-    """bench.py's marginal-time column is keyed by this set; a renamed
-    or dropped streaming query must fail here, not silently lose its
-    de-noised column (r9 verdict task #4)."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    from bench import STREAMING_QUERIES
-
-    missing = STREAMING_QUERIES - set(full_registry())
-    assert not missing, f"bench STREAMING_QUERIES not in registry: {missing}"
-
-
 def test_registry_import_error_is_loud(monkeypatch):
     """A query module that fails to import must fail the registry, not
     silently drop its queries."""

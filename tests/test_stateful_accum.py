@@ -14,7 +14,14 @@ import time
 
 from anti_ddos_spark.schemas import PACKET_SCHEMA
 from anti_ddos_spark.streaming.sessionize_stream import flow_features_arrayagg
-from anti_ddos_spark.streaming.stateful_accum import stateful_flow_features_accum
+from anti_ddos_spark.streaming.stateful_accum import (
+    ACC_NAMES,
+    STATE_SCHEMA,
+    pack_state,
+    stateful_flow_features_accum,
+    unpack_state,
+    update_accumulators,
+)
 from tests.conftest import make_packets
 from tests.oracle_utils import assert_finals_match
 
@@ -40,6 +47,26 @@ def _wait_finals(spark, name, n_flows):
             break
         time.sleep(2)
     return spark.table(name)
+
+
+def test_state_row_is_the_accumulator_doubles():
+    """A flow's state row holds its accumulators alone, in ACC_NAMES
+    order, and survives the pack/unpack round trip unchanged."""
+    import pandas as pd
+
+    flags = ["fin_flag", "syn_flag", "rst_flag", "psh_flag",
+             "ack_flag", "urg_flag", "cwr_flag", "ece_flag"]
+    pdf = pd.DataFrame({
+        "ts_us": [1_000, 2_000, 2_000, 3_500, 4_000],
+        "from_a": [True, False, True, False, True],
+        "tcp_seq": [1.0, 7.0, None, 9.0, 2.0],
+        "length": [60, 1500, 1200, 40, 1100],
+        "act": [True, True, False, True, True],
+        **{c: [0, 1, 1, 0, i % 2] for i, c in enumerate(flags)},
+    })
+    acc = update_accumulators(None, pdf, ("10.0.0.1", 1234, "10.0.0.2", 80, 6))
+    assert STATE_SCHEMA.fieldNames() == ACC_NAMES
+    assert unpack_state(pack_state(acc)) == acc
 
 
 def test_accum_finals_match_batch(spark, tmp_path):
